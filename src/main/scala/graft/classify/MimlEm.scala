@@ -3,6 +3,7 @@ package graft.classify
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.IntMap
+import graft.ops.Fixpoint
 
 /**
  * C2 MIML-RE: the z/y latent-variable EM trainer of the reference's
@@ -358,95 +359,86 @@ object MimlEm {
       rows.unpersist()
       model
     } else {
-      // working state: per-bag current assignment, init = local
-      // working state is localCheckpoint'ed (eager), not just persisted:
-      // 8 epochs x 3 folds chain ~50 map/join layers onto the same
-      // lineage, and an un-truncated iterative plan grows until analysis
-      // itself fails (the 8-epoch freeze died printing its own plan
-      // tree) — same pattern as GraphOps' per-round truncation
-      var cur = rows.map { b =>
-        val z = b.pos_labels.sorted.headOption.getOrElse(NilLabel)
-        AssignedBag(b.bag_id, b.pos_labels, b.sents, b.sents.map(_ => z))
-      }.localCheckpoint(true)
       // per-fold z weights kept across epochs (the reference's
       // zClassifiers[] array) — the incomplete-KB relabeling scores each
       // bag with its own fold's classifier from the previous sweep
-      val foldZ = new Array[(Map[String, Double], Map[String, scala.collection.immutable.IntMap[Double]])](folds)
+      val foldZ = new Array[(Map[String, Double], Map[String, IntMap[Double]])](folds)
       lazy val nBags = rows.count()
       lazy val nPos = rows.map(_.pos_labels.size.toLong).reduce(_ + _)
-      var e = 0
-      var converged = false
-      while (e < epochs && !converged) {
-        unlabeledTheta match {
-          case Some(theta) if e > 0 =>
+      // one round per (epoch, fold) E-step; state: (per-bag current
+      // assignment, init = local; bags whose z changed so far this epoch)
+      val out = Fixpoint.run(spark, "mimlEm", epochs * folds) { r =>
+        val init = rows.map { b =>
+          val z = b.pos_labels.sorted.headOption.getOrElse(NilLabel)
+          AssignedBag(b.bag_id, b.pos_labels, b.sents, b.sents.map(_ => z))
+        }
+        ((r.cache(init.toDF()).as[AssignedBag], 0L), false)
+      } { case ((prev, changedBefore), r) =>
+        val e = r.index / folds
+        val f = r.index % folds
+        val cur = unlabeledTheta match {
+          case Some(theta) if e > 0 && f == 0 =>
             // restore ORIGINAL KB labels, then promote the global top-k
             // unknowns scored by each bag's own fold classifier (with the
             // CURRENT y weights — the y update ran after last sweep)
-            val nf = folds
             val yw = model.yWeights
             val fm = foldZ.toSeq.map { case (zi, zw) =>
               Model(rels, zi, zw, yw, numFeatures) }
             val relabeled = promoteUnknowns(spark, rows,
-              id => fm((id % nf).toInt), rels, theta, nBags, nPos)
-            val next = cur.toDF().drop("pos_labels")
+              id => fm((id % folds).toInt), rels, theta, nBags, nPos)
+            r.scratch(prev.toDF().drop("pos_labels")
               .join(relabeled.toDF().select($"bag_id", $"pos_labels"), "bag_id")
-              .select($"bag_id", $"pos_labels", $"sents", $"zs")
-              .as[AssignedBag].localCheckpoint(true)
-            cur.unpersist()
-            cur = next
-          case _ =>
+              .select($"bag_id", $"pos_labels", $"sents", $"zs"))
+              .as[AssignedBag]
+          case _ => prev
         }
-        // epoch-start snapshot of the z assignments, for the convergence
-        // check (a (bag_id, zs) projection — small rows, one join below)
-        val prevZs = cur.map(b => (b.bag_id, b.zs)).persist()
-        var f = 0
-        while (f < folds) {
-          // fold-f z classifier: fit on the OTHER folds' assignments
-          val zr = cur.filter(_.bag_id % folds != f)
-            .flatMap(b => b.sents.zip(b.zs))
-          val (zi, zw) = fitZ(spark, zr, zLabels, numFeatures)
-          foldZ(f) = (zi, zw)
-          val foldModel = Model(rels, zi, zw, model.yWeights, numFeatures)
-          // E-step for fold f only; other folds' assignments unchanged
-          val next = cur.map { b =>
-            if (b.bag_id % folds != f) b
-            else b.copy(zs = inferBag(foldModel, b.pos_labels, b.sents))
-          }.localCheckpoint(true)
-          cur.unpersist()
-          cur = next
-          f += 1
+        // fold-f z classifier: fit on the OTHER folds' assignments
+        val zr = cur.filter(_.bag_id % folds != f)
+          .flatMap(b => b.sents.zip(b.zs))
+        val (zi, zw) = fitZ(spark, zr, zLabels, numFeatures)
+        foldZ(f) = (zi, zw)
+        val foldModel = Model(rels, zi, zw, model.yWeights, numFeatures)
+        // E-step for fold f only; other folds' assignments unchanged.
+        // Each bag is re-inferred once per epoch, so the epoch changed a
+        // bag's z iff its fold's step did: counting the flagged bags is
+        // the round's one action
+        val stepped = r.cache(cur.map { b =>
+          if (b.bag_id % folds != f) (b, false)
+          else {
+            val zs = inferBag(foldModel, b.pos_labels, b.sents)
+            (b.copy(zs = zs), zs != b.zs)
+          }
+        }.toDF("bag", "changed"))
+        val changed = changedBefore + Fixpoint.count(stepped.where($"changed"))
+        val next = stepped.select($"bag.*").as[AssignedBag]
+        if (f < folds - 1) ((next, changed), false)
+        else {
+          // M-step y on ALL bags' fresh assignments (per-epoch, like the
+          // reference's y update after its fold sweep)
+          val yw = fitY(spark, next.map(b => (b.pos_labels, b.zs)), rels)
+          model = model.copy(yWeights = yw)
+          // EM fixpoint — the reference's own early stop
+          // ("Stopping training. Did not find any changes in the Z
+          // labels!", JointBayesRelationExtractor.java:699-703,
+          // zUpdatesInOneEpoch == 0): a full epoch that changed no bag's z
+          // assignment cannot change any later epoch either (the z/y fits
+          // and the relabeling are deterministic functions of the
+          // assignments). Lets the production epoch count (8, Props
+          // train.jointbayes.epochs) be configured honestly: the trainer
+          // runs until the reference's budget OR the fixpoint, whichever
+          // comes first. A zero-change epoch 0 must NOT stop a relabeling
+          // run: the relabeling only fires from epoch 1, so the fixpoint
+          // is only genuine once an epoch has run WITH it
+          ((next, 0L), changed == 0L && (unlabeledTheta.isEmpty || e > 0))
         }
-        // M-step y on ALL bags' fresh assignments (per-epoch, like the
-        // reference's y update after its fold sweep)
-        val yw = fitY(spark, cur.map(b => (b.pos_labels, b.zs)), rels)
-        model = model.copy(yWeights = yw)
-        // EM fixpoint — the reference's own early stop
-        // ("Stopping training. Did not find any changes in the Z
-        // labels!", JointBayesRelationExtractor.java:699-703,
-        // zUpdatesInOneEpoch == 0): a full epoch that changed no bag's z
-        // assignment cannot change any later epoch either (the z/y fits
-        // and the relabeling are deterministic functions of the
-        // assignments). Lets the production epoch count (8, Props
-        // train.jointbayes.epochs) be configured honestly: the trainer
-        // runs until the reference's budget OR the fixpoint, whichever
-        // comes first.
-        val changed = cur.map(b => (b.bag_id, b.zs)).toDF("bid", "now")
-          .join(prevZs.toDF("bid", "prev"), "bid")
-          .where(col("now") =!= col("prev")).count()
-        prevZs.unpersist()
-        // a zero-change epoch 0 must NOT stop a relabeling run: the
-        // relabeling only fires from epoch 1, so the fixpoint is only
-        // genuine once an epoch has run WITH it
-        converged = changed == 0L && (unlabeledTheta.isEmpty || e > 0)
-        e += 1
+      } { case ((cur, _), _) =>
+        // final single z classifier over all inferred labels — the
+        // inference-time model (fold classifiers exist only to keep
+        // training honest)
+        val zr = cur.flatMap(b => b.sents.zip(b.zs))
+        val (zi, zw) = fitZ(spark, zr, zLabels, numFeatures)
+        Model(rels, zi, zw, model.yWeights, numFeatures)
       }
-      // final single z classifier over all inferred labels — the
-      // inference-time model (fold classifiers exist only to keep
-      // training honest)
-      val zr = cur.flatMap(b => b.sents.zip(b.zs))
-      val (zi, zw) = fitZ(spark, zr, zLabels, numFeatures)
-      val out = Model(rels, zi, zw, model.yWeights, numFeatures)
-      cur.unpersist()
       rows.unpersist()
       out
     }

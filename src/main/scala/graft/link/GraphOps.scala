@@ -2,7 +2,9 @@ package graft.link
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
 import graft.model.{SlotFill, Triple}
+import graft.ops.Fixpoint
 
 /**
  * Graph operators over the triples/edge table (SURVEY.md §2.9):
@@ -23,18 +25,19 @@ object GraphOps {
 
   /** G3: bounded transitive completion — depth-limited iterative self-join
    *  (test.graph.inference.depth = 3 in the reference's base.conf). New
-   *  edges score = product of the path's scores (noisy chain). */
+   *  edges score = product of the path's scores (noisy chain). `fresh` is
+   *  anti-joined against the closure, so a closure that did not grow is
+   *  the fixpoint. */
   def transitiveClosure(spark: SparkSession, edges: DataFrame,
                         preds: Set[String] = transitivePreds,
                         depth: Int = 3): DataFrame = {
     import spark.implicits._
     val base = edges.filter($"pred".isin(preds.toSeq: _*))
       .select($"subj", $"pred", $"obj", $"score").distinct()
-    var acc = base
-    var accCount = -1L // lazily known; only needed for convergence deltas
-    var frontier = base
-    var d = 1
-    while (d < depth) {
+    // state: (closure, frontier, closure row count)
+    Fixpoint.run(spark, "transitiveClosure", depth - 1) { _ =>
+      ((base, base, Fixpoint.count(base)), false)
+    } { case ((acc, frontier, accCount), r) =>
       val next = frontier.as("a")
         .join(base.as("b"),
           $"a.obj" === $"b.subj" && $"a.pred" === $"b.pred" &&
@@ -42,29 +45,12 @@ object GraphOps {
         .select($"a.subj".as("subj"), $"a.pred".as("pred"),
           $"b.obj".as("obj"), ($"a.score" * $"b.score").as("score"))
         .distinct()
-      val fresh = next.join(acc.select($"subj", $"pred", $"obj"),
-        Seq("subj", "pred", "obj"), "left_anti").persist()
-      val prev = acc
-      if (accCount < 0) accCount = prev.count() // materialize round-1 acc
-      acc = acc.unionByName(fresh).persist()
-      // ONE action on the NEW acc both materializes its cache AND decides
-      // convergence (newCount > accCount <=> fresh was non-empty, since
-      // fresh is anti-joined against acc). Materializing acc BEFORE
-      // unpersisting prev is what keeps later rounds from recomputing the
-      // whole accumulated lineage from base (mirrors RuleInference.infer's
-      // count-then-unpersist order). fresh stays persisted because it is
-      // the next round's frontier.
-      val newCount = acc.count()
-      val grew = newCount > accCount
-      accCount = newCount
-      prev.unpersist()
-      // the old frontier (last round's fresh) was consumed by this round's
-      // join, which newCount just materialized — safe to release now
-      if (frontier ne base) frontier.unpersist()
-      if (!grew) { fresh.unpersist(); d = depth }
-      else { frontier = fresh; d += 1 }
-    }
-    acc
+      val fresh = r.cache(next.join(acc.select($"subj", $"pred", $"obj"),
+        Seq("subj", "pred", "obj"), "left_anti"))
+      val grown = r.cache(acc.unionByName(fresh))
+      val n = Fixpoint.count(grown)
+      ((grown, fresh, n), n == accCount)
+    } { case ((acc, _, _), _) => acc }
   }
 
   /** G6: connected components over an undirected edge list
@@ -80,41 +66,28 @@ object GraphOps {
   def connectedComponents(spark: SparkSession, edges: DataFrame,
                           maxIter: Int = 50): DataFrame = {
     import spark.implicits._
-    val und = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().persist()
-    var labels = und.select($"src".as("v")).distinct()
-      .withColumn("comp", $"v")
-    var changed = true
-    var i = 0
-    while (changed && i < maxIter) {
-      // planBarrier, not a bare persist: `labels` is referenced twice per
-      // round, so persisting alone re-nests the previous round's LOGICAL
-      // PLAN ~2x per round — exponential plan-tree growth that OOMs the
-      // planner on high-diameter graphs long before the 50-round cap
-      // (the data itself is tiny); the barrier truncates the Catalyst
-      // plan while keeping deterministic unpersist semantics
-      val next = planBarrier(spark,
+    Fixpoint.run(spark, "connectedComponents", maxIter, Some(
+      s"connectedComponents did not converge within $maxIter rounds " +
+        "(labels still changing) — the labeling is NOT a fixpoint and " +
+        "using it would silently split entities; raise maxIter or " +
+        "inspect the alias graph for a pathological chain")) { r =>
+      val und = r.hold(edges.select($"src", $"dst")
+        .union(edges.select($"dst".as("src"), $"src".as("dst")))
+        .distinct())
+      ((und, und.select($"src".as("v")).distinct().withColumn("comp", $"v")),
+        false)
+    } { case ((und, labels), r) =>
+      val next = r.cache(
         und.join(labels.withColumnRenamed("v", "dst")
           .withColumnRenamed("comp", "ncomp"), Seq("dst"))
         .groupBy($"src".as("v")).agg(min($"ncomp").as("minNbr"))
         .join(labels, Seq("v"))
-        .select($"v", least($"comp", $"minNbr").as("comp"))).persist()
-      val diff = next.join(labels.withColumnRenamed("comp", "old"), Seq("v"))
-        .filter($"comp" =!= $"old").count()
-      if (i > 0) labels.unpersist()
-      labels = next
-      changed = diff > 0
-      i += 1
-    }
-    und.unpersist()
-    if (changed)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds " +
-          "(labels still changing) — the labeling is NOT a fixpoint and " +
-          "using it would silently split entities; raise maxIter or " +
-          "inspect the alias graph for a pathological chain")
-    labels
+        .select($"v", least($"comp", $"minNbr").as("comp")))
+      val diff = Fixpoint.count(
+        next.join(labels.withColumnRenamed("comp", "old"), Seq("v"))
+          .filter($"comp" =!= $"old"))
+      ((und, next), diff == 0L)
+    } { case ((_, labels), _) => labels }
   }
 
   /** G6 at web scale: connected components via ALTERNATING
@@ -135,102 +108,59 @@ object GraphOps {
    *  Fixpoint = the edge set is unchanged by a round; it is then a star
    *  forest (v, root-of-component) and labels read off directly. Same
    *  output schema as connectedComponents: (v, comp) for EVERY vertex of
-   *  the input, comp = min vertex id of its component. */
+   *  the input, comp = min vertex id of its component; persisted, owned
+   *  by the caller. */
   def connectedComponentsStar(spark: SparkSession, edges: DataFrame,
                               maxIter: Int = 30): DataFrame = {
     import spark.implicits._
-    // full vertex set up front: self-loop-only and isolated-in-filtered
-    // vertices must still get a (v, v) label
-    val verts = edges.select($"src".as("v"))
-      .union(edges.select($"dst".as("v"))).distinct().persist()
-    // each round reads `e` from several operators (the symmetric view is
-    // consumed by both the min-aggregate and the join), so every round's
-    // working set goes through planBarrier + persist: the barrier
-    // truncates the CATALYST PLAN (with persist alone the plan tree
-    // re-nests the previous round's plan ~8x per round — exponential
-    // growth that OOMs the AQE explain-string builder long before the
-    // data is big), while plain persist/unpersist keeps cache cleanup
-    // deterministic (a localCheckpoint's RDD blocks would outlive any
-    // release() the linker can offer its callers)
-    var e = edges.filter($"src" =!= $"dst")
-      .select(greatest($"src", $"dst").as("u"), least($"src", $"dst").as("v"))
-      .distinct().persist()
-    var eCount = e.count()
-    var converged = eCount == 0L
-    var i = 0
-    while (!converged && i < maxIter) {
-      // guide §1.5: label the alternation round's jobs (cleared below)
-      spark.sparkContext.setJobDescription(s"connectedComponents: round $i")
+    // state: (all vertices, oriented edge set, its row count)
+    Fixpoint.run(spark, "connectedComponentsStar", maxIter, Some(
+      s"connectedComponentsStar did not converge within $maxIter " +
+        "alternation rounds — O(log n) convergence makes this " +
+        "unreachable for any real input; inspect the edge table")) { r =>
+      // full vertex set up front: self-loop-only and isolated-in-filtered
+      // vertices must still get a (v, v) label
+      val verts = r.hold(edges.select($"src".as("v"))
+        .union(edges.select($"dst".as("v"))).distinct())
+      val e = r.cache(edges.filter($"src" =!= $"dst")
+        .select(greatest($"src", $"dst").as("u"), least($"src", $"dst").as("v"))
+        .distinct())
+      val n = Fixpoint.count(e)
+      ((verts, e, n), n == 0L)
+    } { case ((verts, e, eCount), r) =>
       // large-star over the symmetric view
       val sym = e.union(e.select($"v".as("u"), $"u".as("v")))
       val mL = sym.groupBy($"u").agg(least(min($"v"), $"u").as("m"))
-      val large = planBarrier(spark,
-        sym.join(mL, "u").filter($"v" > $"u")
-          .select($"v".as("u"), $"m".as("v"))
-          .filter($"u" =!= $"v").distinct()).persist()
+      val large = r.scratch(sym.join(mL, "u").filter($"v" > $"u")
+        .select($"v".as("u"), $"m".as("v"))
+        .filter($"u" =!= $"v").distinct())
       // small-star over the (still u > v oriented) large output
       val mS = large.groupBy($"u").agg(min($"v").as("m"))
-      val next = planBarrier(spark,
-        large.join(mS, "u")
-          .select(explode(array(
-            struct($"v".as("a"), $"m".as("b")),
-            struct($"u".as("a"), $"m".as("b")))).as("p"))
-          .select($"p.a".as("x"), $"p.b".as("y"))
-          .filter($"x" =!= $"y")
-          .select(greatest($"x", $"y").as("u"), least($"x", $"y").as("v"))
-          .distinct()).persist()
+      val next = r.cache(large.join(mS, "u")
+        .select(explode(array(
+          struct($"v".as("a"), $"m".as("b")),
+          struct($"u".as("a"), $"m".as("b")))).as("p"))
+        .select($"p.a".as("x"), $"p.b".as("y"))
+        .filter($"x" =!= $"y")
+        .select(greatest($"x", $"y").as("u"), least($"x", $"y").as("v"))
+        .distinct())
       // fixpoint test: next == e as sets (both distinct) — equal counts
-      // plus an empty one-way anti-join. r6 (guide §1.2 step 2): the
-      // anti-join job is only worth running when the counts already
-      // agree — && short-circuits it away on every non-final round
-      // (one fewer action per round; the loop is job-count-bound at
-      // small scale)
-      val nextCount = next.count()
-      converged = nextCount == eCount &&
-        next.join(e, Seq("u", "v"), "left_anti").count() == 0L
-      large.unpersist()
-      e.unpersist()
-      e = next
-      eCount = nextCount
-      i += 1
+      // plus an empty one-way anti-join. The anti-join job only runs once
+      // the counts agree (&& short-circuits it away on every non-final
+      // round: the loop is job-count-bound at small scale)
+      val nextCount = Fixpoint.count(next)
+      ((verts, next, nextCount), nextCount == eCount &&
+        Fixpoint.count(next.join(e, Seq("u", "v"), "left_anti")) == 0L)
+    } { case ((verts, e, _), r) =>
+      // star forest -> labels; group defensively (a star root is unique
+      // per non-root vertex at the fixpoint, min() is a no-op then)
+      val nonRoot = e.groupBy($"u".as("v")).agg(min($"v").as("comp"))
+      val labels = r.cache(verts.join(nonRoot, Seq("v"), "left")
+        .select($"v", coalesce($"comp", $"v").as("comp")))
+      Fixpoint.count(labels)
+      labels
     }
-    if (!converged) {
-      e.unpersist(); verts.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge within $maxIter " +
-          "alternation rounds — O(log n) convergence makes this " +
-          "unreachable for any real input; inspect the edge table")
-    }
-    // star forest -> labels; group defensively (a star root is unique per
-    // non-root vertex at the fixpoint, min() is a no-op then). Persisted +
-    // materialized so e's and verts' caches can drop NOW; the caller owns
-    // the returned table's unpersist (Linker.canonicalize does so once its
-    // alias table is built).
-    val nonRoot = e.groupBy($"u".as("v")).agg(min($"v").as("comp"))
-    spark.sparkContext.setJobDescription("connectedComponents: labels")
-    val labels = planBarrier(spark,
-      verts.join(nonRoot, Seq("v"), "left")
-        .select($"v", coalesce($"comp", $"v").as("comp"))).persist()
-    labels.count()
-    spark.sparkContext.setJobDescription(null)
-    e.unpersist(); verts.unpersist()
-    labels
   }
-
-  /** Truncate a DataFrame's Catalyst plan to a LogicalRDD over its own
-   *  row RDD. The ROW data is untouched and still computed lazily; only
-   *  the plan tree is cut, so iterative algorithms whose round N+1 plan
-   *  references round N's plan multiple times stay O(1) in plan size
-   *  instead of exponential. (The RDD lineage underneath is a shared DAG
-   *  of objects — it cannot blow up the planner.) Unlike localCheckpoint
-   *  this keeps persist/unpersist fully caller-controlled.
-   *  r6 (guide §1.2 step 2): routed through GraftSqlShim.planBarrier —
-   *  the old `spark.createDataFrame(df.rdd, df.schema)` deserialized
-   *  every row to an external boxed Row and re-encoded it, a double
-   *  conversion paid once per persisted working set per CC/closure/BFS
-   *  round; the shim re-wraps the InternalRow RDD directly. */
-  private def planBarrier(spark: SparkSession, df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.GraftSqlShim.planBarrier(df)
 
   /** Per-node triangle counts + degrees over an undirected simple graph
    *  (edges as (src, dst) in either direction; self-loops and duplicate /
@@ -355,11 +285,11 @@ object GraphOps {
     // (degree count + two semi-joins), so without a plan barrier the
     // Catalyst tree grows 3^rounds — the same planner blowup the
     // connected-components rounds hit; cut it once per round
-    var edges = planBarrier(spark, und0)
+    var edges = GraftSqlShim.planBarrier(und0)
     var survivors = deg0.select($"v")
     for (_ <- 1 to rounds) {
       val keep = degrees(edges).filter($"deg" >= k).select($"v")
-      edges = planBarrier(spark, edges
+      edges = GraftSqlShim.planBarrier(edges
         .join(keep.select($"v".as("a")), Seq("a"), "left_semi")
         .join(keep.select($"v".as("b")), Seq("b"), "left_semi"))
       survivors = keep
@@ -382,8 +312,9 @@ object GraphOps {
    *
    * Per round: join the frontier against the edge table (frontier keyed,
    * shrinks as the graph saturates), anti-join the known set so each node
-   * is labeled at its FIRST (minimal) depth, barrier the plan (the
-   * CC/kCore round-nesting lesson), stop early when the frontier empties.
+   * is labeled at its FIRST (minimal) depth, stop early when the
+   * frontier empties. The rounds cache their tables through [[Fixpoint]];
+   * the returned table is not cached.
    * Known/frontier tables carry (node, depth) only — never neighbor
    * lists, so a 10^4-out-degree hub costs one join row per edge, and the
    * per-round shuffle is bounded by the frontier, not the graph.
@@ -393,26 +324,27 @@ object GraphOps {
     import spark.implicits._
     val src = edges.columns(0); val dst = edges.columns(1)
     val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-    var known = planBarrier(spark,
-      seeds.select(col(seeds.columns.head).as("node")).distinct()
-        .withColumn("depth", lit(0L)))
-    var frontier = known
-    var d = 0L
-    var done = false
-    while (d < maxDepth && !done) {
-      d += 1
-      val next = planBarrier(spark,
+    // state: (known, frontier)
+    Fixpoint.run(spark, "bfsDepth", maxDepth) { r =>
+      val known = r.cache(seeds.select(col(seeds.columns.head).as("node"))
+        .distinct().withColumn("depth", lit(0L)))
+      ((known, known), false)
+    } { case ((known, frontier), r) =>
+      val d = r.index + 1L
+      val next = r.cache(
         e.join(frontier.select($"node".as("src")), Seq("src"), "left_semi")
           .select($"dst".as("node")).distinct()
           .join(known, Seq("node"), "left_anti")
           .withColumn("depth", lit(d)))
-      if (next.isEmpty) done = true
-      else {
-        known = planBarrier(spark, known.unionByName(next))
-        frontier = next
-      }
+      val grown = r.cache(known.unionByName(next))
+      // the round's one action: scanning the grown table materializes
+      // both caches and counts this depth's new nodes
+      val added = Fixpoint.count(grown.where($"depth" === d))
+      ((grown, next), added == 0L)
+    } { case ((known, _), _) =>
+      // a projection, not the cache itself: the caller owns no cache
+      known.select($"node", $"depth")
     }
-    known
   }
 
   /** C10 within-sentence competition (process/RelationFilter.java:23-160,

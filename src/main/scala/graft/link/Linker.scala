@@ -298,9 +298,10 @@ object Linker {
    *  size): when the alias-pair set is broadcast-safe
    *  (<= MaxDriverAliasPairs) the exact transitive fixpoint is folded on
    *  the driver and the rewrite joins are broadcast; above it, components
-   *  come from GraphOps.connectedComponents over the pair table (min-label
-   *  propagation reaches the same fixpoint) and the rewrite is a shuffle
-   *  join — no driver or single-executor memory ceiling. */
+   *  come from GraphOps.connectedComponentsStar over the pair table (the
+   *  large/small-star alternation reaches the same fixpoint in O(log n)
+   *  rounds) and the rewrite is a shuffle join — no driver or
+   *  single-executor memory ceiling. */
   def canonicalize(spark: SparkSession, fillsIn: Dataset[SlotFill])
       : Dataset[SlotFill] = {
     import spark.implicits._
@@ -316,9 +317,8 @@ object Linker {
     // guide §1.5: this action computes the whole upstream (NLP -> bags)
     // into the fills cache plus the blocked alias-candidate pass — name
     // it so stage listings attribute the cost correctly
-    spark.sparkContext.setJobDescription("linker: alias pairs (+fills cache)")
-    val nPairs = pairsDs.count()
-    spark.sparkContext.setJobDescription(null)
+    val nPairs = graft.ops.Fixpoint.labeled(spark.sparkContext,
+      "linker: alias pairs (+fills cache)")(pairsDs.count())
     lastPairCount = nPairs
     lastDistributed = nPairs > MaxDriverAliasPairs
     // nothing to rewrite: skip the joins (the common case on a corpus whose

@@ -44,19 +44,15 @@ object RuleInference {
     edges.select($"subj", $"pred", $"obj", $"score").unionByName(fresh)
   }
 
-  /** Depth-bounded application (test.graph.inference.depth = 3). Each
-   *  round's persist is released once the next round materializes. */
+  /** Depth-bounded application (test.graph.inference.depth = 3); each
+   *  round's one action materializes the grown edge table. */
   def infer(spark: SparkSession, edges: DataFrame,
-            rules: Seq[Rule] = defaultRules, depth: Int = 3): DataFrame = {
-    var acc = edges.select("subj", "pred", "obj", "score")
-    var prev: Option[DataFrame] = None
-    (1 until depth).foreach { _ =>
-      val next = applyOnce(spark, acc, rules).persist()
-      next.count() // materialize before dropping the superseded round
-      prev.foreach(_.unpersist())
-      prev = Some(next)
-      acc = next
-    }
-    acc
-  }
+            rules: Seq[Rule] = defaultRules, depth: Int = 3): DataFrame =
+    graft.ops.Fixpoint.run(spark, "ruleInference", depth - 1) { _ =>
+      (edges.select("subj", "pred", "obj", "score"), false)
+    } { (acc, r) =>
+      val next = r.cache(applyOnce(spark, acc, rules))
+      graft.ops.Fixpoint.count(next)
+      (next, false)
+    } { (acc, _) => acc }
 }

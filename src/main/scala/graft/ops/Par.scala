@@ -17,7 +17,12 @@ import org.apache.spark.sql.functions.col
  *  payload bytes at scale — the fix targets degenerate few-split
  *  inputs, it must never tax healthy ones). The key is the given
  *  deterministic column, never round-robin (guide §2.5: retried tasks
- *  must reproduce the same row placement). */
+ *  must reproduce the same row placement).
+ *
+ *  `df` must be a direct scan (a table read, at most projected or
+ *  filtered): the partition probe `df.rdd.getNumPartitions` plans the
+ *  query, and over a shuffle AQE executes every stage below it just to
+ *  answer. Both callers pass scans. */
 object Par {
   def spread(df: DataFrame, key: String): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism

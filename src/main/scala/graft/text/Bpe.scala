@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Fixpoint
 
 /**
  * Distributed BPE merge training (Sennrich et al. ACL 2016 — the
@@ -22,9 +23,8 @@ import org.apache.spark.sql.functions._
  *      symbols — greedy-left semantics, the reference algorithm's
  *      single-round replace).
  *
- * Each round cuts the logical plan with a fresh-DataFrame barrier (the
- * same lesson the CC/kCore rounds learned: re-planning a self-referential
- * chain nests exponentially).
+ * The rounds run through [[graft.ops.Fixpoint]], which cuts each round's
+ * plan and owns its cache.
  *
  * No end-of-word marker is appended (toy-alphabet corpora here; adding
  * the classic "</w>" sentinel is a one-line change to `symbolize` and
@@ -82,33 +82,29 @@ object Bpe {
   def trainVocab(spark: SparkSession, docs: DataFrame, nMerges: Int,
                  textCol: String = "text")
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var syms = symbolize(wordFreq(docs, textCol))
-      .withColumn("word", concat_ws("", col("syms"))).persist()
-    syms.count()
+    // the most frequent pair if it repeats; the one action per round, so
+    // it also materializes the round's re-encoded vocab
+    def best(syms: DataFrame): Option[(String, String, Long)] =
+      pairCounts(syms).orderBy(col("n").desc, col("l").asc, col("r").asc)
+        .limit(1).collect().headOption
+        .map(t => (t.getString(0), t.getString(1), t.getLong(2)))
+        .filter(_._3 >= 2)
     val out = Seq.newBuilder[(Int, String, String, Long)]
-    var stop = false
-    var rank = 0
-    while (rank < nMerges && !stop) {
-      val top = pairCounts(syms)
-        .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) < 2) stop = true
-      else {
-        val (l, r, n) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += ((rank, l, r, n))
-        val merged = syms.select(mergeExpr(l, r).as("syms"), col("cnt"),
-          col("word"))
-        // plan barrier: re-encoding references the previous round's plan;
-        // without the cut the chain re-nests per round (CC/kCore lesson)
-        val next = spark.createDataFrame(merged.rdd, merged.schema).persist()
-        next.count()
-        syms.unpersist()
-        syms = next
-        rank += 1
-      }
-    }
-    (out.result(), syms)
+    // state: (vocab symbols, its best pair)
+    val vocab = Fixpoint.run(spark, "bpe", nMerges) { r =>
+      val syms = r.cache(symbolize(wordFreq(docs, textCol))
+        .withColumn("word", concat_ws("", col("syms"))))
+      val top = best(syms)
+      ((syms, top), top.isEmpty)
+    } { case ((syms, top), r) =>
+      val (l, rt, n) = top.get
+      out += ((r.index, l, rt, n))
+      val next = r.cache(syms.select(mergeExpr(l, rt).as("syms"), col("cnt"),
+        col("word")))
+      val nextTop = best(next)
+      ((next, nextTop), nextTop.isEmpty)
+    } { case ((syms, _), _) => syms }
+    (out.result(), vocab)
   }
 
   /** Segment a corpus with a trained segmentation table

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Fixpoint
 
 /**
  * Distributed suffix-array construction by PREFIX DOUBLING (Manber &
@@ -63,64 +64,46 @@ object SuffixOps {
       .select($"doc_id", $"pos".cast("long").as("off"), $"col".as("c"))
     val charRanks = denseIds(chars.select($"c").distinct(), Seq("c"))
       .withColumnRenamed("_id", "rank")
-    var cur = chars.join(charRanks, Seq("c")).drop("c")
-      .select($"doc_id", $"off", $"rank").persist()
-    var curCache = cur // the materialized table backing `cur`
-    val n = cur.count()
-    // scale-adaptive round parallelism (r6, guide §2.2): target ~128k
-    // position rows (~4 MB) per sort task, capped by the cluster's
-    // shuffle-partition knob — a tiny corpus does not pay 32-task rounds
-    // and a large one is not AQE-coalesced onto one sorting task (the
-    // explicit count keeps AQE from coalescing a data-sized sort).
-    val nPart = math.min(
-      math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt),
-      math.max(1, (n / 131072L).toInt + 1))
-    var k = 1L
-    var allDistinct = n == 0L
     // r6 round rewrite (guide §1.2 step 1 / §2.4; stage probe: each round
-    // recomputed the partner join ~4x — distinct + range-sample + join-back
-    // — plus a full external-Row barrier round trip; 33.8 s for q81).
-    // Each round is now: ONE partner equi-join (shuffled-hash hint: both
-    // sides are the same cached table, no sort needed), ONE range
-    // shuffle of the paired rows sorted in-partition, materialized once,
-    // and the new DENSE rank read off it by a per-partition scan with
-    // broadcast offsets (pass 1 counts distinct (r1,r2) per partition —
-    // one tiny row per partition). Dense every round, so the final
-    // densify pass disappears, and ranks are DETERMINISTIC given the
-    // materialized sort (no monotonically_increasing_id), which also
-    // kills the old recompute-divergence hazard. Early exit: once every
-    // rank is unique (nDistinct == n) further rounds cannot change the
-    // order — skip them (text with short repeats needs ~log2(longest
-    // repeat) rounds, not log2(maxDocLen)).
-    while (k < maxLen && !allDistinct) {
-      // guide §1.5: label the round's jobs so stage listings read as
-      // operators, not lambda call sites (restored after the loop)
-      spark.sparkContext.setJobDescription(s"suffixRanks: doubling k=$k")
+    // recomputed the partner join ~4x, 33.8 s for q81). A round is ONE
+    // partner equi-join (shuffled-hash: both sides are the same cached
+    // table), ONE range shuffle sorted in-partition, and the new DENSE
+    // rank read off it by a per-partition scan with broadcast offsets;
+    // pass 1 of that scan is the round's one action. Ranks are dense every
+    // round (no final densify) and DETERMINISTIC given the materialized
+    // sort (no monotonically_increasing_id, no recompute divergence).
+    // Early exit once every rank is unique (nDistinct == n): text with
+    // short repeats needs ~log2(longest repeat) rounds, not log2(maxDocLen).
+    // state: (ranks, k, row count, range partitions)
+    Fixpoint.run(spark, "suffixRanks", Int.MaxValue) { r =>
+      val cur = r.cache(chars.join(charRanks, Seq("c")).drop("c")
+        .select($"doc_id", $"off", $"rank"))
+      val n = Fixpoint.count(cur)
+      // scale-adaptive round parallelism (r6, guide §2.2): target ~128k
+      // position rows (~4 MB) per sort task, capped by the cluster's
+      // shuffle-partition knob — a tiny corpus does not pay 32-task rounds
+      // and a large one is not AQE-coalesced onto one sorting task (the
+      // explicit count keeps AQE from coalescing a data-sized sort).
+      val nPart = math.min(
+        math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt),
+        math.max(1, (n / 131072L).toInt + 1))
+      ((cur, 1L, n, nPart), n == 0L || maxLen <= 1)
+    } { case ((cur, k, n, nPart), r) =>
       val right = cur.select($"doc_id", ($"off" - k).as("off"),
         $"rank".as("r2"))
       // partner rank at off+k; a suffix shorter than 2k has none → −1,
       // below every real rank, so a proper prefix stays strictly before
-      // its extensions — exactly string order
-      // persisted LAZILY (no extra action): repartitionByRange's sample
-      // pass is the first consumer and materializes the cache as a side
-      // effect, so the join executes once per round instead of twice
-      // (sample + shuffle); dropped as soon as `sorted` is materialized
-      val paired = cur.select($"doc_id", $"off", $"rank".as("r1"))
+      // its extensions — exactly string order. Cached lazily:
+      // repartitionByRange's sample pass is its first consumer, so the
+      // join executes once per round instead of twice (sample + shuffle).
+      val paired = r.scratch(cur.select($"doc_id", $"off", $"rank".as("r1"))
         .join(right.hint("shuffle_hash"), Seq("doc_id", "off"), "left")
         .na.fill(-1L, Seq("r2"))
-        .select($"doc_id", $"off", $"r1", $"r2")
-        .persist()
+        .select($"doc_id", $"off", $"r1", $"r2"))
       // one range shuffle, sorted in partition; explicit partition count
-      // (a data-sized sort must not be AQE-coalesced onto one task).
-      // planBarrier keeps the per-round Catalyst plan O(1) — with persist
-      // alone the plan tree re-nests per round and the AQE explain-string
-      // builder OOMs long before the data is big.
-      val sorted = org.apache.spark.sql.graft.GraftSqlShim.planBarrier(
-        paired.repartitionByRange(nPart, $"r1", $"r2")
-          .sortWithinPartitions($"r1", $"r2"))
-        .persist()
-      sorted.count()
-      paired.unpersist()
+      // (a data-sized sort must not be AQE-coalesced onto one task)
+      val sorted = r.cache(paired.repartitionByRange(nPart, $"r1", $"r2")
+        .sortWithinPartitions($"r1", $"r2"))
       // pass 1: distinct (r1,r2) per partition — range partitioning puts
       // every (r1,r2) group wholly inside one partition, so these counts
       // compose into exact global dense-rank offsets
@@ -160,20 +143,15 @@ object SuffixOps {
             (d, o, rank)
           }
         }.toDF("doc_id", "off", "rank")
-      curCache.unpersist()
-      cur = next
-      curCache = sorted
-      allDistinct = nDistinct == n
-      k *= 2
+      ((next, k * 2, n, nPart), nDistinct == n || k * 2 >= maxLen)
+    } { case ((cur, _, _, _), r) =>
+      // ranks are dense 1..m after every round (and after round 0:
+      // denseIds already hands out 1..|alphabet|) — no final densify.
+      // Materialized before the cache backing it is released.
+      val out = r.cache(cur)
+      Fixpoint.count(out)
+      out
     }
-    // ranks are dense 1..m after every round (and after round 0: denseIds
-    // already hands out 1..|alphabet|) — no final densify. Materialize
-    // the result BEFORE releasing the cache backing it.
-    spark.sparkContext.setJobDescription("suffixRanks: materialize ranks")
-    val out = cur.localCheckpoint(true)
-    spark.sparkContext.setJobDescription(null)
-    curCache.unpersist()
-    out
   }
 
   /** Dense order-preserving ids 1..m for a DISTINCT-row frame: sort by
