@@ -1,9 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Fixpoint
+import graft.ops.{Fixpoint, Par}
 
 /**
  * Distributed suffix-array construction by PREFIX DOUBLING (Manber &
@@ -26,150 +27,128 @@ import graft.ops.Fixpoint
  * EXACTLY `dense_rank() OVER (ORDER BY suffix-string)` — which is how
  * the DuckDB oracle restates them independently.
  *
- * Scale shape: per doubling round, ONE self-equi-join on
- * (doc_id, off + k) fetches the partner rank, and rank reassignment
- * runs over the DISTINCT (r1, r2) pairs — range-repartitioned, sorted
- * within partitions, order-consistent ids from
- * monotonically_increasing_id (partition ids ascend with the ranges;
- * the distinct collapsed equal pairs first, so equality is preserved).
- * Mid-flight ranks are order-ISOMORPHIC, not dense — density is only
- * restored once at the end (one sorted zipWithIndex, the canonical
- * distributed ranking pattern). No global single-partition window
- * anywhere. Rounds = ceil(log2(max doc length)) — a function of
- * DOCUMENT length, not corpus size. The position table is one row per
- * character: a global suffix array over 100 TB of text is 10^14 rows,
- * so at that scale this runs per curation shard (same code over a
- * keyed subset — how suffix-array dedup is deployed in practice); the
- * per-round plan is shard-size-independent.
+ * Scale shape: the seed ranks every position by its first 16 code
+ * points (one range sort under Spark's UTF-8 byte order), so doubling
+ * starts at prefix length 16. A round is TWO shuffles: `lead(rank, k)`
+ * over each document's positions (hash on doc_id) fetches the partner
+ * rank, and one range shuffle on (r1, r2), sorted within partitions,
+ * hands out the new ranks. Between rounds the ranks are PACKED:
+ * (range partition << 40) | in-partition dense index, computed by the
+ * task that sorted the rows. Partitions ascend with the key ranges and
+ * a key never straddles two, so packed ranks keep the order with no
+ * offsets passed between rounds, and they are a function of the key,
+ * not of where a recomputed row lands. The round's one action scans
+ * the cached ranks for the distinct count per partition; the result
+ * densifies once, from the last round's counts. No global
+ * single-partition window anywhere. Rounds = ceil(log2(maxDocLen / 16))
+ * — a function of DOCUMENT length, not corpus size — or fewer: the loop
+ * stops once every suffix has its own rank. The position table is one
+ * row per character: a global suffix array over 100 TB of text is
+ * 10^14 rows, so at that scale this runs per curation shard (same code
+ * over a keyed subset — how suffix-array dedup is deployed in
+ * practice); the per-round plan is shard-size-independent.
  */
 object SuffixOps {
+
+  /** Code points in the seed prefix; the rounds start at this length. */
+  private val SeedLen = 16
+  /** Packed rank = (range partition << Shift) | in-partition index. */
+  private val Shift = 40
+  private val Mask = (1L << Shift) - 1
 
   /** (doc_id, off, rank): global suffix ranks, dense 1..m over distinct
    *  suffix strings, ties shared by equal suffixes. */
   def suffixRanks(spark: SparkSession, docs: DataFrame,
                   textCol: String = "text"): DataFrame = {
     import spark.implicits._
-    // empty (or all-null-text) input: max() aggregates to NULL — default
-    // to 0 so the doubling loop no-ops and the result is simply empty
-    // (the old head().getInt(0) NPE'd unboxing the null)
-    val maxLenRow = docs.agg(max(length(col(textCol)))).head()
-    val maxLen = if (maxLenRow.isNullAt(0)) 0 else maxLenRow.getInt(0)
-    // initial rank: dense id of the character under Spark's binary
-    // UTF-8 string order (== DuckDB's collation; the alphabet is tiny)
-    // r6 (guide §2.5): the per-character explode multiplies the input
-    // ~550x and a one-row-group table would run it on one task
-    val chars = graft.ops.Par.spread(docs, "doc_id")
-      .select(col("doc_id"), posexplode(split(col(textCol), "")))
-      .filter($"col" =!= "") // split-by-empty-regex emits a trailing ""
-      .select($"doc_id", $"pos".cast("long").as("off"), $"col".as("c"))
-    val charRanks = denseIds(chars.select($"c").distinct(), Seq("c"))
-      .withColumnRenamed("_id", "rank")
-    // r6 round rewrite (guide §1.2 step 1 / §2.4; stage probe: each round
-    // recomputed the partner join ~4x, 33.8 s for q81). A round is ONE
-    // partner equi-join (shuffled-hash: both sides are the same cached
-    // table), ONE range shuffle sorted in-partition, and the new DENSE
-    // rank read off it by a per-partition scan with broadcast offsets;
-    // pass 1 of that scan is the round's one action. Ranks are dense every
-    // round (no final densify) and DETERMINISTIC given the materialized
-    // sort (no monotonically_increasing_id, no recompute divergence).
-    // Early exit once every rank is unique (nDistinct == n): text with
-    // short repeats needs ~log2(longest repeat) rounds, not log2(maxDocLen).
-    // state: (ranks, k, row count, range partitions)
+    val text = col(textCol)
+    // empty (or all-null-text) input: both aggregate to NULL — default to
+    // 0 so the loop stops after the seed and the result is simply empty
+    val lens = docs.agg(max(length(text)), sum(length(text))).head()
+    val maxLen = if (lens.isNullAt(0)) 0 else lens.getInt(0)
+    val n = if (lens.isNullAt(1)) 0L else lens.getLong(1)
+    // scale-adaptive round parallelism (r6, guide §2.2): target ~128k
+    // position rows (~4 MB) per sort task, capped by the cluster's
+    // shuffle-partition knob — a tiny corpus does not pay 32-task rounds
+    // and a large one is not AQE-coalesced onto one sorting task (an
+    // explicit range partition count is never coalesced)
+    val nPart = math.min(
+      math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt),
+      math.max(1, (n / 131072L).toInt + 1))
+    // one row per position with its 16-code-point prefix; the prefixes
+    // are built inside the generator, so no row carries the doc text.
+    // r6 (guide §2.5): the explode multiplies the input ~550x and a
+    // one-row-group table would run it on one task
+    val seed = Par.spread(docs, "doc_id").filter(length(text) > 0)
+      .select(col("doc_id").cast("long").as("doc_id"), posexplode(expr(
+        s"""transform(sequence(0, length($textCol) - 1),
+            i -> substring($textCol, i + 1, $SeedLen))""")))
+      .select($"doc_id", $"pos".cast("long").as("off"), $"col".as("p"))
+    // partner rank at off+k; a suffix shorter than 2k has none → −1,
+    // below every real rank, so a proper prefix stays strictly before
+    // its extensions — exactly string order. A document's positions are
+    // contiguous, so the partner is k rows on in the doc's window.
+    val byDoc = Window.partitionBy($"doc_id").orderBy($"off")
+    // state: (packed ranks of the first k code points, k, distinct ranks
+    // per range partition)
     Fixpoint.run(spark, "suffixRanks", Int.MaxValue) { r =>
-      val cur = r.cache(chars.join(charRanks, Seq("c")).drop("c")
-        .select($"doc_id", $"off", $"rank"))
-      val n = Fixpoint.count(cur)
-      // scale-adaptive round parallelism (r6, guide §2.2): target ~128k
-      // position rows (~4 MB) per sort task, capped by the cluster's
-      // shuffle-partition knob — a tiny corpus does not pay 32-task rounds
-      // and a large one is not AQE-coalesced onto one sorting task (the
-      // explicit count keeps AQE from coalescing a data-sized sort).
-      val nPart = math.min(
-        math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt),
-        math.max(1, (n / 131072L).toInt + 1))
-      ((cur, 1L, n, nPart), n == 0L || maxLen <= 1)
-    } { case ((cur, k, n, nPart), r) =>
-      val right = cur.select($"doc_id", ($"off" - k).as("off"),
-        $"rank".as("r2"))
-      // partner rank at off+k; a suffix shorter than 2k has none → −1,
-      // below every real rank, so a proper prefix stays strictly before
-      // its extensions — exactly string order. Cached lazily:
-      // repartitionByRange's sample pass is its first consumer, so the
-      // join executes once per round instead of twice (sample + shuffle).
-      val paired = r.scratch(cur.select($"doc_id", $"off", $"rank".as("r1"))
-        .join(right.hint("shuffle_hash"), Seq("doc_id", "off"), "left")
-        .na.fill(-1L, Seq("r2"))
-        .select($"doc_id", $"off", $"r1", $"r2"))
-      // one range shuffle, sorted in partition; explicit partition count
-      // (a data-sized sort must not be AQE-coalesced onto one task)
-      val sorted = r.cache(paired.repartitionByRange(nPart, $"r1", $"r2")
-        .sortWithinPartitions($"r1", $"r2"))
-      // pass 1: distinct (r1,r2) per partition — range partitioning puts
-      // every (r1,r2) group wholly inside one partition, so these counts
-      // compose into exact global dense-rank offsets
-      val partCounts = sorted.select($"r1", $"r2").as[(Long, Long)]
-        .mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var nD = 0L
-          var pr1 = 0L
-          var pr2 = 0L
-          var first = true
-          it.foreach { case (r1, r2) =>
-            if (first || r1 != pr1 || r2 != pr2) {
-              nD += 1; first = false; pr1 = r1; pr2 = r2
-            }
-          }
-          Iterator.single((pid, nD))
-        }.collect()
-      val nDistinct = partCounts.map(_._2).sum
-      val base = new Array[Long](partCounts.map(_._1).max + 1)
-      partCounts.sortBy(_._1).foldLeft(0L) { case (acc, (pid, c)) =>
-        base(pid) = acc; acc + c
-      }
-      val baseB = spark.sparkContext.broadcast(base)
-      // pass 2: assign dense ranks 1..nDistinct in sorted order — a
-      // deterministic narrow map over the materialized sort
-      val next = sorted.as[(Long, Long, Long, Long)]
-        .mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var rank = baseB.value(pid)
-          var pr1 = 0L
-          var pr2 = 0L
-          var first = true
-          it.map { case (d, o, r1, r2) =>
-            if (first || r1 != pr1 || r2 != pr2) {
-              rank += 1; first = false; pr1 = r1; pr2 = r2
-            }
-            (d, o, rank)
-          }
-        }.toDF("doc_id", "off", "rank")
-      ((next, k * 2, n, nPart), nDistinct == n || k * 2 >= maxLen)
-    } { case ((cur, _, _, _), r) =>
-      // ranks are dense 1..m after every round (and after round 0:
-      // denseIds already hands out 1..|alphabet|) — no final densify.
+      val cur = r.cache(rankBy(seed, nPart, $"p"))
+      val counts = partCounts(cur)
+      ((cur, SeedLen, counts), counts.values.sum == n || SeedLen >= maxLen)
+    } { case ((cur, k, _), r) =>
+      val paired = cur.select($"doc_id", $"off", $"rank".as("r1"),
+        lead($"rank", k, -1L).over(byDoc).as("r2"))
+      val next = r.cache(rankBy(paired, nPart, $"r1", $"r2"))
+      val counts = partCounts(next)
+      ((next, k * 2, counts), counts.values.sum == n || k * 2 >= maxLen)
+    } { case ((cur, _, counts), r) =>
+      // dense rank = distinct ranks of the earlier partitions + the
+      // in-partition index + 1, read off the packed value alone.
       // Materialized before the cache backing it is released.
-      val out = r.cache(cur)
+      val parts = counts.keys.toSeq.sorted
+      val base = new Array[Long](parts.lastOption.fold(0)(_.toInt + 1))
+      parts.foldLeft(0L) { (acc, p) => base(p.toInt) = acc; acc + counts(p) }
+      val out = r.cache(cur.select($"doc_id", $"off",
+        (element_at(typedLit(base), shiftrightunsigned($"rank", Shift)
+          .cast("int") + 1) + ($"rank" bitwiseAND Mask) + 1).as("rank")))
       Fixpoint.count(out)
       out
     }
   }
 
-  /** Dense order-preserving ids 1..m for a DISTINCT-row frame: sort by
-   *  `cols` (range partition, so the order is global) and zipWithIndex —
-   *  the canonical distributed ranking; the extra count job zipWithIndex
-   *  runs is one pass over the already-shuffled data. */
-  private def denseIds(distinctRows: DataFrame,
-                       cols: Seq[String]): DataFrame = {
-    val spark = distinctRows.sparkSession
-    val sorted = distinctRows.orderBy(cols.map(col): _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+
-        org.apache.spark.sql.types.StructField("_id",
-          org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-    }
-    spark.createDataFrame(rdd, schema)
+  /** (doc_id, off, rank) with packed ranks over `key`: one range
+   *  shuffle, sorted within partitions; each task numbers its distinct
+   *  keys in order. Range partitioning puts every key wholly inside one
+   *  partition and the partitions ascend with the key, so equal keys get
+   *  equal ranks and the packed ranks keep the key order. */
+  private def rankBy(rows: DataFrame, nPart: Int, key: Column*): DataFrame = {
+    import rows.sparkSession.implicits._
+    rows.repartitionByRange(nPart, key: _*).sortWithinPartitions(key: _*)
+      .select($"doc_id", $"off", struct(key: _*))
+      .mapPartitions { it =>
+        val hi = TaskContext.getPartitionId().toLong << Shift
+        var idx = -1L
+        var prev: Row = null
+        it.map { row =>
+          val k = row.getStruct(2)
+          if (k != prev) { idx += 1; prev = k }
+          (row.getLong(0), row.getLong(1), hi | idx)
+        }
+      }.toDF("doc_id", "off", "rank")
+  }
+
+  /** Distinct ranks per range partition, read off the packed ranks by
+   *  one scan — the action that fills the cache of `ranks`. */
+  private def partCounts(ranks: DataFrame): Map[Long, Long] = {
+    import ranks.sparkSession.implicits._
+    ranks.select($"rank").as[Long].mapPartitions { it =>
+      val top = scala.collection.mutable.LongMap.empty[Long]
+      it.foreach { r =>
+        val p = r >>> Shift
+        top(p) = math.max(top.getOrElse(p, 0L), (r & Mask) + 1)
+      }
+      top.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(math.max)
   }
 
   /** Exact duplicated spans of length ≥ minLen: group the suffix array
@@ -204,7 +183,7 @@ object SuffixOps {
     // r6 (guide §2.5): the span generator multiplies the input ~550x
     // with an md5 per span; spread a degenerate few-split scan first
     // (both passes share the one exchange via ReuseExchange)
-    val spreadDocs = graft.ops.Par.spread(docs, "doc_id")
+    val spreadDocs = Par.spread(docs, "doc_id")
     def spans = spreadDocs
       .select(explode(expr(
         s"""transform(sequence(0, greatest(length($textCol) - $minLen, 0)),

@@ -20,6 +20,15 @@ class FixpointSpec extends AnyFunSuite {
     (1L, "the cat sat on the hat"), (2L, "a man a plan a canal"),
     (3L, "banana bandana")).toDF("doc_id", "text")
 
+  /** About 200 characters each, with a 73-character period and two
+   *  equal docs: from the 16-code-point seed, prefix doubling runs 4
+   *  rounds (to 256). */
+  private def longDocs = {
+    val s = "the quick brown fox jumps over the lazy dog while the cat sat on the mat "
+    Seq((0L, (s * 3).take(200)), (1L, (s * 3).take(200)),
+      (2L, ("a " + s * 3).take(200))).toDF("doc_id", "text")
+  }
+
   /** A 24-hop chain, a triangle and a self-loop. */
   private def ccEdges = ((0 until 24).map(i => (f"v$i%02d", f"v${i + 1}%02d")) ++
     Seq(("p", "q"), ("q", "r"), ("r", "p"), ("z", "z"))).toDF("src", "dst")
@@ -95,14 +104,14 @@ class FixpointSpec extends AnyFunSuite {
     }
   }
 
-  /** Number of Spark jobs `f` starts, counted by job group. */
-  private def jobsOf(f: => Any): Int = {
+  /** Descriptions of the Spark jobs `f` starts, picked out by job group. */
+  private def jobsOf(f: => Any): Seq[String] = {
     val group = s"fixpoint-jobs-${System.nanoTime}"
-    val started = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach(g => started.merge(g, 1, (a, b) => a + b))
+        Option(js.properties).foreach(p => started.add(
+          (p.getProperty("spark.jobGroup.id"), p.getProperty("spark.job.description"))))
     }
     sc.addSparkListener(listener)
     try {
@@ -113,22 +122,32 @@ class FixpointSpec extends AnyFunSuite {
       val marker = s"$group-marker"
       sc.setJobGroup(marker, "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      def seen = started.toArray(Array.empty[(String, String)]).toSeq
       val deadline = System.nanoTime + 30000000000L
-      while (!started.containsKey(marker) && System.nanoTime < deadline)
+      while (!seen.exists(_._1 == marker) && System.nanoTime < deadline)
         Thread.sleep(10)
-      assert(started.containsKey(marker), "listener never saw the marker job")
-      Option(started.get(group)).map(_.intValue).getOrElse(0)
+      assert(seen.exists(_._1 == marker), "listener never saw the marker job")
+      seen.filter(_._1 == group).map(_._2)
     } finally sc.removeSparkListener(listener)
   }
 
   test("suffixRanks and connectedComponentsStar run one action per round") {
-    val suffixJobs = jobsOf(SuffixOps.suffixRanks(spark, docs).unpersist())
-    val starJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())
-    info(s"suffixRanks: $suffixJobs jobs, connectedComponentsStar: $starJobs jobs")
+    val suffixJobs = jobsOf(SuffixOps.suffixRanks(spark, docs).unpersist()).size
+    val long = jobsOf(SuffixOps.suffixRanks(spark, longDocs).unpersist())
+    val starJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist()).size
+    info(s"suffixRanks: $suffixJobs jobs, on ~200-char docs ${long.size}, " +
+      s"connectedComponentsStar: $starJobs jobs")
     // measured with a count + a collect per doubling round and a
     // localCheckpoint'ed result: 52 jobs (5 rounds of 8). One action per
-    // round, counted over the cached rows: 36.
-    assert(suffixJobs <= 36, s"suffixRanks ran $suffixJobs jobs")
+    // round, counted over the cached rows: 36. Seeded from 16-code-point
+    // prefixes (one round on these <= 22-char docs), the partner rank
+    // from a window and packed ranks: 9.
+    assert(suffixJobs <= 9, s"suffixRanks ran $suffixJobs jobs")
+    // ~200-char docs: 4 rounds of 3 jobs, plus 5 setup and 1 result.
+    // With a 1-character seed (8 rounds), the partner from a join and
+    // dense ranks from broadcast offsets: 51.
+    assert(long.contains("suffixRanks: round 3"), s"rounds: ${long.distinct}")
+    assert(long.size <= 18, s"suffixRanks ran ${long.size} jobs on ~200-char docs")
     // measured with Dataset.count() per round (an aggregate on top of
     // the cache, one more job each): 91 (6 rounds). Now: 72.
     assert(starJobs <= 72, s"connectedComponentsStar ran $starJobs jobs")

@@ -28,23 +28,75 @@ class SuffixSpec extends AnyFunSuite {
       (0L, 1L) -> 2L, (1L, 1L) -> 2L))
   }
 
-  test("suffix ranks == brute-force dense rank on a multi-doc fixture") {
-    val docs = Seq((0L, "the cat sat on the mat"),
-      (1L, "the cat ran"), (2L, "a mat on the floor"), (3L, ""),
-      (4L, "zz")).toDF("doc_id", "text")
-    val got = SuffixOps.suffixRanks(spark, docs).collect()
+  /** Brute-force suffix ranks: every code-point suffix of every doc,
+   *  dense-ranked in UTF-8 byte order — Spark's string order. (Java's
+   *  String order is UTF-16's, which differs past U+FFFF.) */
+  private def bruteRanks(docs: Seq[(Long, String)]): Map[(Long, Long), Long] = {
+    val all = docs.flatMap { case (id, t) =>
+      val cps = t.codePoints().toArray
+      cps.indices.map(i => (id, i.toLong, new String(cps, i, cps.length - i)))
+    }
+    val ranks = all.map(_._3).distinct
+      .map(s => s -> s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._2, b._2) < 0)
+      .zipWithIndex.map { case ((s, _), i) => s -> (i + 1L) }.toMap
+    all.map { case (id, off, s) => (id, off) -> ranks(s) }.toMap
+  }
+
+  /** suffixRanks equals `want`; a failure names a few wrong positions. */
+  private def assertRanks(docs: Seq[(Long, String)],
+                          want: Map[(Long, Long), Long]): Unit = {
+    val got = SuffixOps.suffixRanks(spark, docs.toDF("doc_id", "text")).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    // brute force: sort all suffix strings, dense-rank them
-    val all = Seq((0L, "the cat sat on the mat"), (1L, "the cat ran"),
-      (2L, "a mat on the floor"), (4L, "zz"))
-      .flatMap { case (id, t) =>
-        (0 until t.length).map(i => (id, i.toLong, t.substring(i)))
-      }
-    val ranks = all.map(_._3).distinct.sorted.zipWithIndex
-      .map { case (s, i) => s -> (i + 1L) }.toMap
-    val want = all.map { case (id, off, s) => (id, off) -> ranks(s) }.toMap
-    assert(got == want)
-    assert(!got.keySet.exists(_._1 == 3L)) // empty doc: no positions
+    val bad = want.filter { case (pos, r) => !got.get(pos).contains(r) }
+    val same = got.size == want.size && bad.isEmpty // no macro dump of the maps
+    assert(same, s"${got.size} ranks for " +
+      s"${want.size} positions, ${bad.size} wrong, e.g. " +
+      bad.take(3).map { case (pos, r) => s"$pos: ${got.get(pos)} != $r" })
+  }
+
+  test("suffix ranks == brute-force dense rank on a multi-doc fixture") {
+    val docs = Seq((0L, "the cat sat on the mat"), (1L, "the cat ran"),
+      (2L, "a mat on the floor"), (3L, ""), (4L, "zz"))
+    // the empty doc has no positions, so its absence is part of the match
+    assertRanks(docs, bruteRanks(docs))
+  }
+
+  test("suffix ranks == brute force across several range partitions") {
+    // 400 docs x 400 chars = 160,000 positions: past the 131,072 rows per
+    // sort task, so every range sort runs on 2 of the session's 8
+    // shuffle partitions. Exact copies and one-char mutations of 50 base
+    // texts give equal suffixes across docs and repeats that differ only
+    // after 16, 32, ... characters, so every doubling round runs.
+    val rnd = new scala.util.Random(7)
+    val bases = Array.fill(50)(Array.fill(400)("ab c"(rnd.nextInt(4))).mkString)
+    val docs = (0 until 400).map { i =>
+      val t = bases(i % 50).toCharArray
+      if (i % 3 != 0) t(rnd.nextInt(400)) = 'x'
+      (i.toLong, new String(t))
+    }
+    assert(docs.map(_._2.length).sum > 131072)
+    assertRanks(docs, bruteRanks(docs))
+  }
+
+  test("suffix ranks: unicode docs equal a UTF-8-ordered code-point brute force") {
+    // 2-byte (é, ж), 3-byte (世, ﬀ) and 4-byte (😀, 𝕏) code points. The
+    // shared 24-code-point stretch ties the 16-code-point seed, so the
+    // first four docs' leading suffixes differ only after it. ﬀ (U+FB00)
+    // sorts before 😀 in UTF-8 but after it in UTF-16 (surrogates are
+    // 0xD8xx), so a Java String sort would order them the other way.
+    val shared = "aé世😀жﬀ𝕏b" * 3
+    val rnd = new scala.util.Random(11)
+    val alphabet = Array("a", "é", "ж", "世", "ﬀ", "😀", "𝕏")
+    val texts = Seq(s"$shared😀 end", s"${shared}ﬀ end", s"x$shared😀",
+      s"${shared}é") ++
+      Seq.fill(8)(Seq.fill(40)(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val want = bruteRanks(docs)
+    // the fixture separates the two orders: bytes put doc 1's leading
+    // suffix first, Java's String order doc 0's
+    assert(want((1L, 0L)) < want((0L, 0L)) && texts(0) < texts(1))
+    assertRanks(docs, want)
   }
 
   test("longest repeats: SA adjacency finds ana/na in banana") {
