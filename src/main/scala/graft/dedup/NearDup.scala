@@ -235,12 +235,13 @@ object NearDup {
    *  near-dups differ by truncation. Docs in no cluster keep themselves.
    *
    *  Scale shape: edges are linear in corpus size (star edges, no
-   *  all-pairs), components converge in ~diameter min-label rounds
-   *  (star graphs: a handful), and the election is ONE extra shuffle on
-   *  the cluster key (struct-max aggregate, map-side combinable) plus a
-   *  broadcast-size join back — nothing here is quadratic in a cluster's
-   *  size, so a 10^8-doc template cluster costs the same per-row work as
-   *  a pair. Returns (doc_id, cluster, n_tokens, keep) ordered by doc_id. */
+   *  all-pairs); components come from connectedComponentsStar — a driver
+   *  union-find while the distinct edges fit its gate (uncached labels,
+   *  no rounds), O(log n) large/small-star rounds above it — and the
+   *  election is ONE extra shuffle on the cluster key (struct-max
+   *  aggregate, map-side combinable) plus a broadcast-size join back —
+   *  nothing here is quadratic in a cluster's size, so a 10^8-doc
+   *  template cluster costs the same per-row work as a pair. Returns (doc_id, cluster, n_tokens, keep) ordered by doc_id. */
   def dedupClusters(spark: SparkSession, docs: DataFrame): DataFrame =
     dedupVerdicts(spark, docs).orderBy(col("doc_id"))
 
@@ -252,10 +253,11 @@ object NearDup {
     import spark.implicits._
     val edges = minhashStarEdges(spark, docs, shingle)
       .select($"d1".as("src"), $"d2".as("dst"))
-    // the O(log n)-round large/small-star variant: band reps CAN chain
-    // (doc in bucket A's star is the rep of bucket B), so no diameter
-    // guarantee exists on a pathological crawl — same (v, comp = min id)
-    // contract as min-label propagation
+    // the size-adaptive star variant: band reps CAN chain (doc in bucket
+    // A's star is the rep of bucket B), so no diameter guarantee exists on
+    // a pathological crawl; small edge sets finish on the driver, large
+    // ones in O(log n) rounds — same (v, comp = min id) contract as
+    // min-label propagation
     val comps = graft.link.GraphOps.connectedComponentsStar(spark, edges)
       .withColumnRenamed("v", "doc_id")
     val toks = docs.select($"doc_id",

@@ -1,8 +1,11 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlShim
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.model.{SlotFill, Triple}
 import graft.ops.Fixpoint
 
@@ -100,34 +103,55 @@ object GraphOps {
    *  min-label variant above fails loudly past its cap; this one makes the
    *  cap unreachable for any input that fits a cluster).
    *
-   *  Invariant: the working edge set is kept oriented u > v and distinct.
+   *  SIZE-ADAPTIVE, like the linker: setup deduplicates the (src, dst)
+   *  edges once and counts them. At most `driverEdges` distinct edges
+   *  (default: the linker's [[Linker.MaxDriverAliasPairs]] gate) are
+   *  collected and folded by [[unionFindMin]] on the driver under Spark's
+   *  ordering of the vertex type (UTF-8 byte order for strings); the
+   *  labels come back as a local DataFrame that is NOT cached (its rows
+   *  are in the plan, so there is nothing to release). Above the gate the
+   *  rounds run:
+   *
+   *  Invariant: from round 1 on, the working edge set is oriented u > v
+   *  and distinct (round 0 reads the distinct input edges as they are).
    *   - large-star: every neighbor LARGER than u links to
    *     m = min(N(u) ∪ {u}) — new edges (bigger, m) keep the orientation.
    *   - small-star: per u, all (smaller-or-equal) neighbors AND u itself
    *     link to m = min neighbor.
    *  Fixpoint = the edge set is unchanged by a round; it is then a star
-   *  forest (v, root-of-component) and labels read off directly. Same
-   *  output schema as connectedComponents: (v, comp) for EVERY vertex of
-   *  the input, comp = min vertex id of its component; persisted, owned
-   *  by the caller. */
+   *  forest (v, root-of-component) and labels read off directly; that
+   *  result is persisted and owned by the caller. Both paths return the
+   *  same rows, with connectedComponents' schema: (v, comp) for EVERY
+   *  vertex of the input, comp = min vertex id of its component (a null
+   *  endpoint labels itself null and joins no component). */
   def connectedComponentsStar(spark: SparkSession, edges: DataFrame,
-                              maxIter: Int = 30): DataFrame = {
+                              maxIter: Int = 30,
+                              driverEdges: Long = Linker.MaxDriverAliasPairs)
+      : DataFrame = {
     import spark.implicits._
-    // state: (all vertices, oriented edge set, its row count)
+    // state: the distinct input edges, then — above the gate only — (all
+    // vertices, working edge set, its row count)
     Fixpoint.run(spark, "connectedComponentsStar", maxIter, Some(
       s"connectedComponentsStar did not converge within $maxIter " +
         "alternation rounds — O(log n) convergence makes this " +
         "unreachable for any real input; inspect the edge table")) { r =>
-      // full vertex set up front: self-loop-only and isolated-in-filtered
-      // vertices must still get a (v, v) label
-      val verts = r.hold(edges.select($"src".as("v"))
-        .union(edges.select($"dst".as("v"))).distinct())
-      val e = r.cache(edges.filter($"src" =!= $"dst")
-        .select(greatest($"src", $"dst").as("u"), least($"src", $"dst").as("v"))
-        .distinct())
-      val n = Fixpoint.count(e)
-      ((verts, e, n), n == 0L)
-    } { case ((verts, e, eCount), r) =>
+      val x = r.hold(edges.select($"src", $"dst").distinct())
+      if (Fixpoint.count(x) <= driverEdges) ((x, None), true)
+      else {
+        // full vertex set up front: self-loop-only and isolated-in-filtered
+        // vertices must still get a (v, v) label
+        val verts = r.hold(x.select($"src".as("v"))
+          .union(x.select($"dst".as("v"))).distinct())
+        // round 0 reads the edges straight from x: large-star works on
+        // any symmetric view, and its output is oriented and distinct.
+        // Count -1 marks the view as not comparable, so round 0 never
+        // reports convergence, and setup spends no shuffle and no count
+        // on an oriented copy
+        val e = x.filter($"src" =!= $"dst").select($"src".as("u"), $"dst".as("v"))
+        ((x, Some((verts, e, -1L))), false)
+      }
+    } { case ((x, rounds), r) =>
+      val (verts, e, eCount) = rounds.get // rounds run only above the gate
       // large-star over the symmetric view
       val sym = e.union(e.select($"v".as("u"), $"u".as("v")))
       val mL = sym.groupBy($"u").agg(least(min($"v"), $"u").as("m"))
@@ -149,17 +173,65 @@ object GraphOps {
       // the counts agree (&& short-circuits it away on every non-final
       // round: the loop is job-count-bound at small scale)
       val nextCount = Fixpoint.count(next)
-      ((verts, next, nextCount), nextCount == eCount &&
+      ((x, Some((verts, next, nextCount))), nextCount == eCount &&
         Fixpoint.count(next.join(e, Seq("u", "v"), "left_anti")) == 0L)
-    } { case ((verts, e, _), r) =>
-      // star forest -> labels; group defensively (a star root is unique
-      // per non-root vertex at the fixpoint, min() is a no-op then)
-      val nonRoot = e.groupBy($"u".as("v")).agg(min($"v").as("comp"))
-      val labels = r.cache(verts.join(nonRoot, Seq("v"), "left")
-        .select($"v", coalesce($"comp", $"v").as("comp")))
-      Fixpoint.count(labels)
-      labels
+    } {
+      case ((x, None), _) => driverComponents(spark, x)
+      case ((_, Some((verts, e, _))), r) =>
+        // star forest -> labels; group defensively (a star root is unique
+        // per non-root vertex at the fixpoint, min() is a no-op then)
+        val nonRoot = e.groupBy($"u".as("v")).agg(min($"v").as("comp"))
+        val labels = r.cache(verts.join(nonRoot, Seq("v"), "left")
+          .select($"v", coalesce($"comp", $"v").as("comp")))
+        Fixpoint.count(labels)
+        labels
     }
+  }
+
+  /** connectedComponentsStar's driver path over the distinct (src, dst)
+   *  edges `x`: one job collects them, [[unionFindMin]] folds them under
+   *  Spark's ordering of the vertex type, and the (v, comp) labels come
+   *  back as a local frame. A self-loop registers its vertex; a null
+   *  endpoint labels itself null and links nothing, as in the rounds. */
+  private def driverComponents(spark: SparkSession, x: DataFrame): DataFrame = {
+    val t = x.select("src").union(x.select("dst")).schema.head.dataType
+    val rows = x.select(col("src").cast(t), col("dst").cast(t))
+      .asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan
+      .executeCollect()
+    val pairs = rows.iterator.flatMap { row =>
+      val (a, b) = (row.get(0, t), row.get(1, t))
+      if (a == null || b == null) Iterator((a, a), (b, b)) else Iterator((a, b))
+    }
+    val labels = unionFindMin(pairs, TypeUtils.getInterpretedOrdering(t))
+    GraftSqlShim.localFrame(spark,
+      StructType(Seq(StructField("v", t), StructField("comp", t))),
+      labels.iterator.map { case (v, c) => InternalRow(v, c) }.toSeq)
+  }
+
+  /** Union-find over in-memory pairs: every vertex of `pairs` -> the
+   *  minimum under `ord` of its component; a pair (a, a) only registers
+   *  a. A union keeps the smaller root, so each root is its component's
+   *  minimum, and finds compress their paths. The one union-find of the
+   *  codebase: connectedComponentsStar's driver path and the linker's
+   *  driver alias map both fold through it. */
+  def unionFindMin[T](pairs: Iterator[(T, T)], ord: Ordering[T])
+      : collection.Map[T, T] = {
+    val parent = scala.collection.mutable.HashMap.empty[T, T]
+    def find(v: T): T = {
+      var root = v
+      while (parent(root) != root) root = parent(root)
+      var c = v
+      while (c != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    // compress every path: the parent map is then the label map
+    parent.keys.toVector.foreach(find)
+    parent
   }
 
   /** Per-node triangle counts + degrees over an undirected simple graph

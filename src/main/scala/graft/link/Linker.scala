@@ -28,7 +28,10 @@ import graft.nlp.Coref
  *    dictionaries"), so folding it on the driver adds no new memory
  *    ceiling — and it reaches the exact transitive fixpoint (no bounded
  *    propagation-round assumption), replacing 2 join+aggregate rounds
- *    (~6 exchanges) with zero.
+ *    (~6 exchanges) with zero. Above [[MaxDriverAliasPairs]] pairs the
+ *    components come from GraphOps.connectedComponentsStar under the same
+ *    gate; both paths share one union-find, [[GraphOps.unionFindMin]]
+ *    (the star finishes with it when its distinct edges fit the gate).
  */
 object Linker {
 
@@ -233,37 +236,12 @@ object Linker {
     } finally pairsDs.unpersist()
   }
 
-  /** Probe-only accessor for tools measuring the serial driver segment. */
-  def driverAliasMapProbe(pairs: Array[(String, String)]): Map[String, String] =
-    driverAliasMap(pairs)
-
-  /** Union-find fold over an in-memory pair set (exact fixpoint). */
+  /** Union-find fold over an in-memory pair set (exact fixpoint) through
+   *  [[GraphOps.unionFindMin]]: each name maps to the minimum of its
+   *  component under repOrdering, the maximal surface form. */
   private def driverAliasMap(pairs: Array[(String, String)])
       : Map[String, String] = {
-    val parent = scala.collection.mutable.HashMap[String, String]()
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      // path compression
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val next = parent(c); parent(c) = r; c = next }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(ra) = rb
-    }
-    // canonical member per component = min under repOrdering over members
-    val byRoot = scala.collection.mutable.HashMap[String, String]()
-    val names = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toVector.distinct
-    names.foreach { n =>
-      val r = find(n)
-      byRoot.get(r) match {
-        case Some(best) => if (repOrdering.lt(n, best)) byRoot(r) = n
-        case None => byRoot(r) = n
-      }
-    }
-    val out = names.iterator.map(n => n -> byRoot(find(n)))
+    val out = GraphOps.unionFindMin(pairs.iterator, repOrdering).iterator
       .filter(p => p._1 != p._2).toMap
     lastAliasCount = out.size.toLong
     out
@@ -345,7 +323,7 @@ object Linker {
         // have no diameter guarantee at web scale, and the alternation
         // converges in O(log n) rounds on any shape (GraphOps scaladoc)
         val comps = GraphOps.connectedComponentsStar(spark,
-          pairsDs.toDF("src", "dst"))
+          pairsDs.toDF("src", "dst"), driverEdges = MaxDriverAliasPairs)
         val rep = comps.groupBy($"comp")
           .agg(min(struct((-length($"v")).as("nl"), $"v".as("n")))
             .getField("n").as("canon"))

@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /**
  * Column <-> Expression bridge for graft's native Catalyst expressions
@@ -35,4 +39,12 @@ object GraftSqlShim {
     val spark = cds.sparkSession
     spark.internalCreateDataFrame(cds.queryExecution.toRdd, cds.schema)
   }
+
+  /** A DataFrame over InternalRows already on the driver (a
+   *  LocalRelation: no job to build it, nothing cached). Lives here
+   *  because `Dataset.ofRows` is `private[sql]`. */
+  def localFrame(spark: SparkSession, schema: StructType,
+                 rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

@@ -56,6 +56,19 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Set((1L, 1L, 1L), (2L, 2L, 4L)))
   }
 
+  test("dedupClusters and clusterSizeHistogram leave no cached labels behind") {
+    // the signature table's local checkpoint is the only block a call may
+    // leave (isCheckpointed); the connected-component labels must not stay
+    // persisted once the result is read
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.filterNot(_._2.isCheckpointed).keySet
+    val before = persisted
+    assert(NearDup.dedupClusters(spark, docs).collect().length == 4)
+    assert(NearDup.clusterSizeHistogram(spark, docs).collect().nonEmpty)
+    assert((persisted -- before).isEmpty,
+      s"persisted RDDs left: ${(persisted -- before).map(sc.getPersistentRDDs)}")
+  }
+
   test("exact dedup groups identical content") {
     val d = NearDup.exact(docs).collect()
     assert(d.length == 3)

@@ -56,6 +56,8 @@ class FixpointSpec extends AnyFunSuite {
       "suffixRanks" -> (() => SuffixOps.suffixRanks(spark, docs).unpersist()),
       "connectedComponentsStar" ->
         (() => GraphOps.connectedComponentsStar(spark, ccEdges).unpersist()),
+      "connectedComponentsStar (rounds)" -> (() =>
+        GraphOps.connectedComponentsStar(spark, ccEdges, driverEdges = 0L).unpersist()),
       "canonicalize" -> { () => Linker.canonicalize(spark, fills); Linker.release() })
     try {
       sc.setJobGroup("caller-group", "caller: traced op")
@@ -102,6 +104,11 @@ class FixpointSpec extends AnyFunSuite {
       assert(comps.count() == 29L)
       Some(comps)
     }
+    assertOnlyResultCached("connectedComponentsStar (rounds)") {
+      val comps = GraphOps.connectedComponentsStar(spark, ccEdges, driverEdges = 0L)
+      assert(comps.count() == 29L)
+      Some(comps)
+    }
   }
 
   /** Descriptions of the Spark jobs `f` starts, picked out by job group. */
@@ -134,9 +141,12 @@ class FixpointSpec extends AnyFunSuite {
   test("suffixRanks and connectedComponentsStar run one action per round") {
     val suffixJobs = jobsOf(SuffixOps.suffixRanks(spark, docs).unpersist()).size
     val long = jobsOf(SuffixOps.suffixRanks(spark, longDocs).unpersist())
-    val starJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist()).size
+    val starJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges,
+      driverEdges = 0L).unpersist()).size
+    val driverJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())
     info(s"suffixRanks: $suffixJobs jobs, on ~200-char docs ${long.size}, " +
-      s"connectedComponentsStar: $starJobs jobs")
+      s"connectedComponentsStar: $starJobs jobs in rounds, " +
+      s"${driverJobs.size} on the driver path")
     // measured with a count + a collect per doubling round and a
     // localCheckpoint'ed result: 52 jobs (5 rounds of 8). One action per
     // round, counted over the cached rows: 36. Seeded from 16-code-point
@@ -149,7 +159,13 @@ class FixpointSpec extends AnyFunSuite {
     assert(long.contains("suffixRanks: round 3"), s"rounds: ${long.distinct}")
     assert(long.size <= 18, s"suffixRanks ran ${long.size} jobs on ~200-char docs")
     // measured with Dataset.count() per round (an aggregate on top of
-    // the cache, one more job each): 91 (6 rounds). Now: 72.
+    // the cache, one more job each): 91 (6 rounds). Now: 72 (driverEdges
+    // = 0 forces the rounds).
     assert(starJobs <= 72, s"connectedComponentsStar ran $starJobs jobs")
+    // under the driver gate the same input runs no round: setup counts the
+    // distinct edges (3 jobs) and the result collects them (1). Before
+    // the gate the default call ran the rounds: 72 jobs.
+    assert(!driverJobs.exists(_.contains("round")), s"jobs: ${driverJobs.distinct}")
+    assert(driverJobs.size <= 4, s"driver path ran ${driverJobs.size} jobs")
   }
 }

@@ -177,8 +177,8 @@ class ModulesSpec extends AnyFunSuite {
       ("p", "q"), ("q", "r"), ("r", "p"),
       ("z", "z"),
       ("h", "h1"), ("h", "h2"), ("h", "h3")).toDF("src", "dst")
-    val star = GraphOps.connectedComponentsStar(spark, edges).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
+    val star = GraphOps.connectedComponentsStar(spark, edges, driverEdges = 0L)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
     val minl = GraphOps.connectedComponents(spark, edges).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(star == minl)
@@ -192,8 +192,8 @@ class ModulesSpec extends AnyFunSuite {
     val n = 120
     val edges = (0 until n).map(i => (f"v$i%03d", f"v${i + 1}%03d"))
       .toDF("src", "dst")
-    val comp = GraphOps.connectedComponentsStar(spark, edges).collect()
-      .map(r => (r.getString(0), r.getString(1)))
+    val comp = GraphOps.connectedComponentsStar(spark, edges, driverEdges = 0L)
+      .collect().map(r => (r.getString(0), r.getString(1)))
     assert(comp.length == n + 1)
     assert(comp.forall(_._2 == "v000")) // one component, min label
   }
