@@ -241,7 +241,8 @@ object NearDup {
    *  election is ONE extra shuffle on the cluster key (struct-max
    *  aggregate, map-side combinable) plus a broadcast-size join back —
    *  nothing here is quadratic in a cluster's size, so a 10^8-doc
-   *  template cluster costs the same per-row work as a pair. Returns (doc_id, cluster, n_tokens, keep) ordered by doc_id. */
+   *  template cluster costs the same per-row work as a pair. Returns
+   *  (doc_id, cluster, n_tokens, keep) ordered by doc_id. */
   def dedupClusters(spark: SparkSession, docs: DataFrame): DataFrame =
     dedupVerdicts(spark, docs).orderBy(col("doc_id"))
 

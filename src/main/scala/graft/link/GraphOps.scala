@@ -103,17 +103,16 @@ object GraphOps {
    *  min-label variant above fails loudly past its cap; this one makes the
    *  cap unreachable for any input that fits a cluster).
    *
-   *  SIZE-ADAPTIVE, like the linker: setup deduplicates the (src, dst)
-   *  edges once and counts them. At most `driverEdges` distinct edges
-   *  (default: the linker's [[Linker.MaxDriverAliasPairs]] gate) are
-   *  collected and folded by [[unionFindMin]] on the driver under Spark's
-   *  ordering of the vertex type (UTF-8 byte order for strings); the
-   *  labels come back as a local DataFrame that is NOT cached (its rows
-   *  are in the plan, so there is nothing to release). Above the gate the
-   *  rounds run:
+   *  SIZE-ADAPTIVE, like the linker: setup orients each (src, dst) edge
+   *  as (larger, smaller), deduplicates once and counts. At most
+   *  [[Linker.MaxDriverAliasPairs]] distinct edges (the linker's gate;
+   *  specs set it to 0 to force the rounds) are collected and folded by
+   *  [[unionFindMin]] on the driver under Spark's ordering of the vertex
+   *  type (UTF-8 byte order for strings); the labels come back as a local
+   *  DataFrame that is NOT cached (its rows are in the plan, so there is
+   *  nothing to release). Above the gate the rounds run:
    *
-   *  Invariant: from round 1 on, the working edge set is oriented u > v
-   *  and distinct (round 0 reads the distinct input edges as they are).
+   *  Invariant: the working edge set is kept oriented u > v and distinct.
    *   - large-star: every neighbor LARGER than u links to
    *     m = min(N(u) ∪ {u}) — new edges (bigger, m) keep the orientation.
    *   - small-star: per u, all (smaller-or-equal) neighbors AND u itself
@@ -125,30 +124,32 @@ object GraphOps {
    *  vertex of the input, comp = min vertex id of its component (a null
    *  endpoint labels itself null and joins no component). */
   def connectedComponentsStar(spark: SparkSession, edges: DataFrame,
-                              maxIter: Int = 30,
-                              driverEdges: Long = Linker.MaxDriverAliasPairs)
-      : DataFrame = {
+                              maxIter: Int = 30): DataFrame = {
     import spark.implicits._
-    // state: the distinct input edges, then — above the gate only — (all
-    // vertices, working edge set, its row count)
+    // state: the oriented distinct edges, then — above the gate only —
+    // (all vertices, working edge set, a bound on its row count)
     Fixpoint.run(spark, "connectedComponentsStar", maxIter, Some(
       s"connectedComponentsStar did not converge within $maxIter " +
         "alternation rounds — O(log n) convergence makes this " +
         "unreachable for any real input; inspect the edge table")) { r =>
-      val x = r.hold(edges.select($"src", $"dst").distinct())
-      if (Fixpoint.count(x) <= driverEdges) ((x, None), true)
+      // a null endpoint compares to nothing, so its row keeps its order
+      val swap = $"src" < $"dst"
+      val x = r.hold(edges.select(
+        when(swap, $"dst").otherwise($"src").as("src"),
+        when(swap, $"src").otherwise($"dst").as("dst")).distinct())
+      val n = Fixpoint.count(x)
+      if (n <= Linker.MaxDriverAliasPairs) ((x, None), true)
       else {
         // full vertex set up front: self-loop-only and isolated-in-filtered
         // vertices must still get a (v, v) label
         val verts = r.hold(x.select($"src".as("v"))
           .union(x.select($"dst".as("v"))).distinct())
-        // round 0 reads the edges straight from x: large-star works on
-        // any symmetric view, and its output is oriented and distinct.
-        // Count -1 marks the view as not comparable, so round 0 never
-        // reports convergence, and setup spends no shuffle and no count
-        // on an oriented copy
+        // already oriented and distinct: dropping self-loops and null
+        // rows leaves at most n edges. The round's test needs next == e
+        // as sets, and next ⊆ e with |next| == n >= |e| proves it, so a
+        // loop-free star forest converges in round 0
         val e = x.filter($"src" =!= $"dst").select($"src".as("u"), $"dst".as("v"))
-        ((x, Some((verts, e, -1L))), false)
+        ((x, Some((verts, e, n))), false)
       }
     } { case ((x, rounds), r) =>
       val (verts, e, eCount) = rounds.get // rounds run only above the gate
@@ -189,14 +190,14 @@ object GraphOps {
   }
 
   /** connectedComponentsStar's driver path over the distinct (src, dst)
-   *  edges `x`: one job collects them, [[unionFindMin]] folds them under
-   *  Spark's ordering of the vertex type, and the (v, comp) labels come
-   *  back as a local frame. A self-loop registers its vertex; a null
-   *  endpoint labels itself null and links nothing, as in the rounds. */
+   *  edges `x` (both columns of one type): one job collects them,
+   *  [[unionFindMin]] folds them under Spark's ordering of the vertex
+   *  type, and the (v, comp) labels come back as a local frame. A
+   *  self-loop registers its vertex; a null endpoint labels itself null
+   *  and links nothing, as in the rounds. */
   private def driverComponents(spark: SparkSession, x: DataFrame): DataFrame = {
-    val t = x.select("src").union(x.select("dst")).schema.head.dataType
-    val rows = x.select(col("src").cast(t), col("dst").cast(t))
-      .asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan
+    val t = x.schema.head.dataType
+    val rows = x.asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan
       .executeCollect()
     val pairs = rows.iterator.flatMap { row =>
       val (a, b) = (row.get(0, t), row.get(1, t))

@@ -209,8 +209,10 @@ object Linker {
    *  a shuffle-join rewrite. At 100-TB entity universes the NON-IDENTITY
    *  pair set itself grows with the corpus (10^8+ rows): both the driver
    *  collect and the executor-side broadcast hash map become memory
-   *  ceilings, so the path must be size-adaptive, not fixed. var so specs
-   *  can force the distributed path on small fixtures. */
+   *  ceilings, so the path must be size-adaptive, not fixed. The same
+   *  gate sends GraphOps.connectedComponentsStar to its rounds above this
+   *  many distinct edges. var so specs can force the distributed paths on
+   *  small fixtures. */
   @volatile var MaxDriverAliasPairs: Long = 1000000L
 
   /** name -> canonical name, exact transitive fixpoint via union-find over
@@ -323,7 +325,7 @@ object Linker {
         // have no diameter guarantee at web scale, and the alternation
         // converges in O(log n) rounds on any shape (GraphOps scaladoc)
         val comps = GraphOps.connectedComponentsStar(spark,
-          pairsDs.toDF("src", "dst"), driverEdges = MaxDriverAliasPairs)
+          pairsDs.toDF("src", "dst"))
         val rep = comps.groupBy($"comp")
           .agg(min(struct((-length($"v")).as("nl"), $"v".as("n")))
             .getField("n").as("canon"))

@@ -56,8 +56,8 @@ class FixpointSpec extends AnyFunSuite {
       "suffixRanks" -> (() => SuffixOps.suffixRanks(spark, docs).unpersist()),
       "connectedComponentsStar" ->
         (() => GraphOps.connectedComponentsStar(spark, ccEdges).unpersist()),
-      "connectedComponentsStar (rounds)" -> (() =>
-        GraphOps.connectedComponentsStar(spark, ccEdges, driverEdges = 0L).unpersist()),
+      "connectedComponentsStar (rounds)" -> (() => DriverGate.closed(
+        GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())),
       "canonicalize" -> { () => Linker.canonicalize(spark, fills); Linker.release() })
     try {
       sc.setJobGroup("caller-group", "caller: traced op")
@@ -105,7 +105,7 @@ class FixpointSpec extends AnyFunSuite {
       Some(comps)
     }
     assertOnlyResultCached("connectedComponentsStar (rounds)") {
-      val comps = GraphOps.connectedComponentsStar(spark, ccEdges, driverEdges = 0L)
+      val comps = DriverGate.closed(GraphOps.connectedComponentsStar(spark, ccEdges))
       assert(comps.count() == 29L)
       Some(comps)
     }
@@ -141,8 +141,8 @@ class FixpointSpec extends AnyFunSuite {
   test("suffixRanks and connectedComponentsStar run one action per round") {
     val suffixJobs = jobsOf(SuffixOps.suffixRanks(spark, docs).unpersist()).size
     val long = jobsOf(SuffixOps.suffixRanks(spark, longDocs).unpersist())
-    val starJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges,
-      driverEdges = 0L).unpersist()).size
+    val starJobs = DriverGate.closed(
+      jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())).size
     val driverJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())
     info(s"suffixRanks: $suffixJobs jobs, on ~200-char docs ${long.size}, " +
       s"connectedComponentsStar: $starJobs jobs in rounds, " +
@@ -159,13 +159,28 @@ class FixpointSpec extends AnyFunSuite {
     assert(long.contains("suffixRanks: round 3"), s"rounds: ${long.distinct}")
     assert(long.size <= 18, s"suffixRanks ran ${long.size} jobs on ~200-char docs")
     // measured with Dataset.count() per round (an aggregate on top of
-    // the cache, one more job each): 91 (6 rounds). Now: 72 (driverEdges
-    // = 0 forces the rounds).
+    // the cache, one more job each): 91 (6 rounds). Now: 72 (the driver
+    // gate at 0 forces the rounds).
     assert(starJobs <= 72, s"connectedComponentsStar ran $starJobs jobs")
     // under the driver gate the same input runs no round: setup counts the
     // distinct edges (3 jobs) and the result collects them (1). Before
     // the gate the default call ran the rounds: 72 jobs.
     assert(!driverJobs.exists(_.contains("round")), s"jobs: ${driverJobs.distinct}")
     assert(driverJobs.size <= 4, s"driver path ran ${driverJobs.size} jobs")
+  }
+
+  test("connectedComponentsStar's rounds stop in round 0 on a star forest") {
+    // NearDup's edge shape: (rep, member) with rep = min of its bucket,
+    // so the input already is the fixpoint; round 0 sees that only if it
+    // compares against the setup's edge count, else round 1 runs too
+    val stars = (1 to 7).map(i => (0L, i.toLong)) ++ (11 to 13).map(i => (10L, i.toLong))
+    val jobs = DriverGate.closed(jobsOf {
+      val comps = GraphOps.connectedComponentsStar(spark, stars.toDF("src", "dst"))
+      assert(comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        stars.flatMap { case (r, m) => Seq(r -> r, m -> r) }.toMap)
+      comps.unpersist()
+    })
+    assert(jobs.exists(_.contains("round 0")), s"jobs: ${jobs.distinct}")
+    assert(!jobs.exists(_.contains("round 1")), s"jobs: ${jobs.distinct}")
   }
 }

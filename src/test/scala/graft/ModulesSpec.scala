@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.evaluate.Evaluate
 import graft.link.GraphOps
@@ -177,11 +178,14 @@ class ModulesSpec extends AnyFunSuite {
       ("p", "q"), ("q", "r"), ("r", "p"),
       ("z", "z"),
       ("h", "h1"), ("h", "h2"), ("h", "h3")).toDF("src", "dst")
-    val star = GraphOps.connectedComponentsStar(spark, edges, driverEdges = 0L)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val minl = GraphOps.connectedComponents(spark, edges).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
+    def labels(df: DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    // the rounds (driver gate at 0) and the driver union-find
+    val star = labels(DriverGate.closed(GraphOps.connectedComponentsStar(spark, edges)))
+    val local = labels(GraphOps.connectedComponentsStar(spark, edges))
+    val minl = labels(GraphOps.connectedComponents(spark, edges))
     assert(star == minl)
+    assert(local == minl)
     assert(star.contains(("z", "z"))) // self-loop-only vertex keeps a label
   }
 
@@ -192,7 +196,7 @@ class ModulesSpec extends AnyFunSuite {
     val n = 120
     val edges = (0 until n).map(i => (f"v$i%03d", f"v${i + 1}%03d"))
       .toDF("src", "dst")
-    val comp = GraphOps.connectedComponentsStar(spark, edges, driverEdges = 0L)
+    val comp = DriverGate.closed(GraphOps.connectedComponentsStar(spark, edges))
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(comp.length == n + 1)
     assert(comp.forall(_._2 == "v000")) // one component, min label
