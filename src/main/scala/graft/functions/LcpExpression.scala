@@ -108,11 +108,18 @@ object LcpKernel {
   }
 
   /** LCP in code points of a[oa:] vs b[ob:], capped at `cap`. */
-  def lcpAt(a: UTF8String, oa: Long, b: UTF8String, ob: Long, cap: Int): Int = {
+  def lcpAt(a: UTF8String, oa: Long, b: UTF8String, ob: Long, cap: Int): Int =
+    lcpAtBytes(a, byteOffsetOf(a.getBaseObject, a.getBaseOffset, a.numBytes(), oa),
+      b, byteOffsetOf(b.getBaseObject, b.getBaseOffset, b.numBytes(), ob), cap)
+
+  /** [[lcpAt]] from BYTE offsets of the two suffixes, for a caller that
+   *  already knows them (the driver-side suffix array). */
+  def lcpAtBytes(a: UTF8String, byteA: Int, b: UTF8String, byteB: Int,
+                 cap: Int): Int = {
     val abase = a.getBaseObject; val aoff = a.getBaseOffset; val an = a.numBytes()
     val bbase = b.getBaseObject; val boff = b.getBaseOffset; val bn = b.numBytes()
-    var ia = byteOffsetOf(abase, aoff, an, oa)
-    var ib = byteOffsetOf(bbase, boff, bn, ob)
+    var ia = byteA
+    var ib = byteB
     var n = 0
     while (n < cap && ia < an && ib < bn) {
       val la = UTF8String.numBytesForFirstByte(Platform.getByte(abase, aoff + ia))

@@ -108,8 +108,8 @@ object GraphOps {
    *  [[Linker.MaxDriverAliasPairs]] distinct edges (the linker's gate;
    *  specs set it to 0 to force the rounds) are collected and folded by
    *  [[unionFindMin]] on the driver under Spark's ordering of the vertex
-   *  type (UTF-8 byte order for strings); the labels come back as a local
-   *  DataFrame that is NOT cached (its rows are in the plan, so there is
+   *  type (UTF-8 byte order for strings); the labels come back through
+   *  `GraftSqlShim.driverFrame`, an RDD scan that is NOT cached (there is
    *  nothing to release). Above the gate the rounds run:
    *
    *  Invariant: the working edge set is kept oriented u > v and distinct.
@@ -192,7 +192,7 @@ object GraphOps {
   /** connectedComponentsStar's driver path over the distinct (src, dst)
    *  edges `x` (both columns of one type): one job collects them,
    *  [[unionFindMin]] folds them under Spark's ordering of the vertex
-   *  type, and the (v, comp) labels come back as a local frame. A
+   *  type, and the (v, comp) labels come back as a driver frame. A
    *  self-loop registers its vertex; a null endpoint labels itself null
    *  and links nothing, as in the rounds. */
   private def driverComponents(spark: SparkSession, x: DataFrame): DataFrame = {
@@ -204,9 +204,9 @@ object GraphOps {
       if (a == null || b == null) Iterator((a, a), (b, b)) else Iterator((a, b))
     }
     val labels = unionFindMin(pairs, TypeUtils.getInterpretedOrdering(t))
-    GraftSqlShim.localFrame(spark,
+    GraftSqlShim.driverFrame(spark,
       StructType(Seq(StructField("v", t), StructField("comp", t))),
-      labels.iterator.map { case (v, c) => InternalRow(v, c) }.toSeq)
+      labels.iterator.map { case (v, c) => InternalRow(v, c) })
   }
 
   /** Union-find over in-memory pairs: every vertex of `pairs` -> the

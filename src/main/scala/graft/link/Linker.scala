@@ -211,8 +211,10 @@ object Linker {
    *  collect and the executor-side broadcast hash map become memory
    *  ceilings, so the path must be size-adaptive, not fixed. The same
    *  gate sends GraphOps.connectedComponentsStar to its rounds above this
-   *  many distinct edges. var so specs can force the distributed paths on
-   *  small fixtures. */
+   *  many distinct edges, and SuffixOps.suffixRanks / longestRepeats to
+   *  their doubling rounds above this many code-point positions (both
+   *  measured with graft.StarGateBench). var so specs can force the
+   *  distributed paths on small fixtures. */
   @volatile var MaxDriverAliasPairs: Long = 1000000L
 
   /** name -> canonical name, exact transitive fixpoint via union-find over

@@ -85,9 +85,12 @@ object Fixpoint {
   }
 
   /** Row count of `df` counted over its rows, filling its cache if it
-   *  has one: `Dataset.count()` plans an aggregate on top, one more job. */
-  def count(df: DataFrame): Long =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.toRdd.count()
+   *  has one: `Dataset.count()` plans an aggregate on top, one more job,
+   *  and counting a persisted table through its plan runs the cache as an
+   *  adaptive stage of its own, one more again; a cached table is counted
+   *  off its cache's batches instead. */
+  def count(df: DataFrame): Long = GraftSqlShim.cachedCount(df).getOrElse(
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.toRdd.count())
 
   /** Runs `body` with its jobs described as `desc`, then restores the
    *  caller's description (and with it any enclosing trace label). */

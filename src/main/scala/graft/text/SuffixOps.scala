@@ -1,9 +1,16 @@
 package graft.text
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.LcpKernel
+import graft.link.Linker
 import graft.ops.{Fixpoint, Par}
 
 /**
@@ -47,6 +54,16 @@ import graft.ops.{Fixpoint, Par}
  * 10^14 rows, so at that scale this runs per curation shard (same code
  * over a keyed subset — how suffix-array dedup is deployed in
  * practice); the per-round plan is shard-size-independent.
+ *
+ * SIZE-ADAPTIVE, like connectedComponentsStar: one aggregate counts the
+ * code-point positions, and at most [[Linker.MaxDriverAliasPairs]] of
+ * them (specs set it to 0 to force the rounds) are ranked on the driver.
+ * One job collects the (doc_id, text) rows and [[DriverSuffixes]] runs
+ * the same prefix doubling in memory, each round two counting sorts, in
+ * milliseconds where the rounds spend a few Spark jobs each; the result
+ * comes back through `GraftSqlShim.driverFrame`, an RDD scan that is not
+ * cached (a caller's `unpersist()` is a no-op). Both paths return the
+ * same rows under the same schema, and the driver path runs no round.
  */
 object SuffixOps {
 
@@ -60,13 +77,39 @@ object SuffixOps {
    *  suffix strings, ties shared by equal suffixes. */
   def suffixRanks(spark: SparkSession, docs: DataFrame,
                   textCol: String = "text"): DataFrame = {
+    val (maxLen, n) = lengths(spark, docs, textCol, "suffixRanks")
+    if (n <= Linker.MaxDriverAliasPairs)
+      Fixpoint.labeled(spark.sparkContext, "suffixRanks: result") {
+        val sa = DriverSuffixes.collect(docs, textCol)
+        GraftSqlShim.driverFrame(spark, RanksSchema, sa.rankRows)
+      }
+    else rankRounds(spark, docs, textCol, maxLen, n)
+  }
+
+  /** suffixRanks' schema on both paths. */
+  private val RanksSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("off", LongType, nullable = false),
+    StructField("rank", LongType, nullable = false)))
+
+  /** (longest document, total positions) in code points, by one
+   *  aggregate labeled `name: setup`. Empty or all-null-text input
+   *  aggregates to NULLs, read as 0. */
+  private def lengths(spark: SparkSession, docs: DataFrame, textCol: String,
+                      name: String): (Int, Long) = {
+    val text = col(textCol)
+    val lens = Fixpoint.labeled(spark.sparkContext, s"$name: setup")(
+      docs.agg(max(length(text)), sum(length(text))).head())
+    (if (lens.isNullAt(0)) 0 else lens.getInt(0),
+      if (lens.isNullAt(1)) 0L else lens.getLong(1))
+  }
+
+  /** suffixRanks above the gate: the doubling rounds, as Spark jobs, over
+   *  `n` positions in documents of at most `maxLen` code points. */
+  private def rankRounds(spark: SparkSession, docs: DataFrame, textCol: String,
+                         maxLen: Int, n: Long): DataFrame = {
     import spark.implicits._
     val text = col(textCol)
-    // empty (or all-null-text) input: both aggregate to NULL — default to
-    // 0 so the loop stops after the seed and the result is simply empty
-    val lens = docs.agg(max(length(text)), sum(length(text))).head()
-    val maxLen = if (lens.isNullAt(0)) 0 else lens.getInt(0)
-    val n = if (lens.isNullAt(1)) 0L else lens.getLong(1)
     // scale-adaptive round parallelism (r6, guide §2.2): target ~128k
     // position rows (~4 MB) per sort task, capped by the cluster's
     // shuffle-partition knob — a tiny corpus does not pay 32-task rounds
@@ -211,12 +254,33 @@ object SuffixOps {
    *  in-partition neighbor pairing; the ≤-one-per-partition boundary
    *  pairs come from a lead() over the per-partition extremes — a
    *  single-partition window over a table bounded by the partition
-   *  COUNT (cluster configuration, not data size). */
+   *  COUNT (cluster configuration, not data size). Below the gate the
+   *  pairs come straight from the driver's suffix array, and no frame of
+   *  positions is built. */
   def longestRepeats(spark: SparkSession, docs: DataFrame, k: Int = 20,
                      capChars: Int = 200,
                      textCol: String = "text"): DataFrame = {
+    val (maxLen, n) = lengths(spark, docs, textCol, "longestRepeats")
+    if (n <= Linker.MaxDriverAliasPairs)
+      Fixpoint.labeled(spark.sparkContext, "longestRepeats: result") {
+        GraftSqlShim.driverFrame(spark, RepeatsSchema,
+          DriverSuffixes.collect(docs, textCol).longestRepeats(k, capChars)
+            .iterator.map { case (span, lcp, pairs) => InternalRow(span, lcp, pairs) })
+      }
+    else repeatRounds(spark, docs, k, capChars, textCol,
+      rankRounds(spark, docs, textCol, maxLen, n))
+  }
+
+  /** longestRepeats' schema on both paths (the rounds' boundary pairs
+   *  come from a nullable aggregate, so span and lcp are nullable). */
+  private val RepeatsSchema = StructType(Seq(StructField("span", StringType),
+    StructField("lcp", LongType), StructField("n_pairs", LongType, nullable = false)))
+
+  /** longestRepeats above the gate, over the doubling rounds' ranks. */
+  private def repeatRounds(spark: SparkSession, docs: DataFrame, k: Int,
+                           capChars: Int, textCol: String,
+                           ranks: DataFrame): DataFrame = {
     import spark.implicits._
-    val ranks = suffixRanks(spark, docs, textCol)
     // r6 (guide §2.3 "shuffle keys and metadata instead of payloads" /
     // §8): the former plan joined every position to its doc text, built
     // the capped suffix STRING, and range-shuffled those strings (118 MB
@@ -278,5 +342,124 @@ object SuffixOps {
         $"l".cast("long").as("lcp"))
       .groupBy($"span", $"lcp").agg(count(lit(1)).as("n_pairs"))
       .orderBy($"lcp".desc, $"span").limit(k)
+  }
+}
+
+/** The suffix array of documents held on the driver: Manber &
+ *  Myers' prefix doubling over code points, each round two stable
+ *  counting sorts, with rank 0 past a document's end. Equal suffixes
+ *  share a rank and a proper prefix sorts before its extensions, so the
+ *  ranks are the rounds' dense ranks. The first round's keys are each
+ *  code point's UTF-8 bytes, left-aligned: UTF-8 is prefix-free, so they
+ *  order code points as Spark's byte order does (not as Java's UTF-16
+ *  `compareTo`). LCPs come from [[LcpKernel]], spans from
+ *  `UTF8String.substring` and span order from `UTF8String.compareTo`, so
+ *  no string semantics are restated here. Positions are the documents'
+ *  code points laid end to end in input order. */
+private[text] final class DriverSuffixes(ids: Array[Long], texts: Array[UTF8String]) {
+  private val n = texts.iterator.map(_.numChars.toLong).sum.toInt
+  /** Per position: its document, and its byte offset in that text. */
+  private val doc, byteOff = new Array[Int](n)
+  /** Per document: its first position; one more entry for the end. */
+  private val start = new Array[Int](texts.length + 1)
+  /** Per position: dense rank 1..m; positions in rank order. */
+  private val rank, sa = new Array[Int](n)
+
+  locally {
+    val keys = new Array[Long](n)
+    var i = 0
+    for (d <- texts.indices) {
+      start(d) = i
+      val t = texts(d)
+      val (base, off, nb) = (t.getBaseObject, t.getBaseOffset, t.numBytes)
+      var b = 0
+      while (b < nb) {
+        val len = UTF8String.numBytesForFirstByte(Platform.getByte(base, off + b))
+        var key = 0L // the code point's bytes, left-aligned in 32 bits
+        for (j <- 0 until 4) key = key << 8 |
+          (if (j < len && b + j < nb) Platform.getByte(base, off + b + j) & 0xff else 0)
+        keys(i) = key << 31 | i
+        doc(i) = d; byteOff(i) = b
+        b += len; i += 1
+      }
+    }
+    start(texts.length) = n
+    java.util.Arrays.sort(keys)
+    var m = 0
+    for (j <- 0 until n) {
+      if (j == 0 || keys(j) >>> 31 != keys(j - 1) >>> 31) m += 1
+      sa(j) = (keys(j) & Int.MaxValue).toInt
+      rank(sa(j)) = m
+    }
+    val maxLen = texts.indices.map(d => start(d + 1) - start(d)).maxOption.getOrElse(0)
+    val byR2, next = new Array[Int](n)
+    var k = 1 // ranks order the first k code points
+    while (m < n && k < maxLen) {
+      def r2(p: Int) = if (p + k < start(doc(p) + 1)) rank(p + k) else 0
+      // positions by second key: past-the-end first, then in sa order
+      var t = 0
+      for (p <- 0 until n) if (r2(p) == 0) { byR2(t) = p; t += 1 }
+      for (j <- 0 until n) {
+        val p = sa(j) - k
+        if (p >= 0 && doc(p) == doc(sa(j))) { byR2(t) = p; t += 1 }
+      }
+      // stable counting sort by first key
+      val slot = new Array[Int](m + 2)
+      for (p <- byR2) slot(rank(p) + 1) += 1
+      for (r <- 1 to m) slot(r) += slot(r - 1)
+      for (p <- byR2) { sa(slot(rank(p))) = p; slot(rank(p)) += 1 }
+      var c = 0
+      for (j <- 0 until n) {
+        val p = sa(j)
+        if (j == 0 || rank(p) != rank(sa(j - 1)) || r2(p) != r2(sa(j - 1))) c += 1
+        next(p) = c
+      }
+      System.arraycopy(next, 0, rank, 0, n)
+      m = c; k *= 2
+    }
+  }
+
+  /** InternalRows of (doc_id, off, rank), in position order. */
+  def rankRows: Iterator[InternalRow] = (0 until n).iterator.map { p =>
+    InternalRow(ids(doc(p)), (p - start(doc(p))).toLong, rank(p).toLong)
+  }
+
+  /** The top-k (span, lcp, n_pairs) by (lcp desc, span asc): each
+   *  rank-adjacent pair of suffixes with a capped LCP of at least 2
+   *  counts once for the LCP's prefix. Spans are cut only for the LCP
+   *  values the top k reach. */
+  def longestRepeats(k: Int, cap: Int): Seq[(UTF8String, Long, Long)] = {
+    // (lcp << 32 | j) of the pair (sa(j - 1), sa(j)), longest first
+    val pairs = (1 until n).iterator.flatMap { j =>
+      val (a, b) = (sa(j - 1), sa(j))
+      val l = LcpKernel.lcpAtBytes(texts(doc(a)), byteOff(a), texts(doc(b)), byteOff(b), cap)
+      if (l >= 2) Some(l.toLong << 32 | j) else None
+    }.toArray
+    java.util.Arrays.sort(pairs)
+    val groups = scala.collection.mutable.HashMap.empty[(UTF8String, Long), Long]
+    var i = pairs.length - 1
+    while (i >= 0 && groups.size < k) {
+      val l = pairs(i) >>> 32
+      while (i >= 0 && pairs(i) >>> 32 == l) {
+        val a = sa((pairs(i) & 0xffffffffL).toInt - 1)
+        val off = a - start(doc(a))
+        val span = texts(doc(a)).substring(off, off + l.toInt)
+        groups((span, l)) = groups.getOrElse((span, l), 0L) + 1
+        i -= 1
+      }
+    }
+    groups.toSeq.map { case ((span, l), c) => (span, l, c) }
+      .sortWith((x, y) => x._2 > y._2 || x._2 == y._2 && x._1.compareTo(y._1) < 0)
+      .take(k)
+  }
+}
+
+private[text] object DriverSuffixes {
+  /** One job collects the non-empty (doc_id, text) rows of `docs`. */
+  def collect(docs: DataFrame, textCol: String): DriverSuffixes = {
+    val rows = docs.select(col("doc_id").cast("long"), col(textCol))
+      .filter(length(col(textCol)) > 0)
+      .asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan.executeCollect()
+    new DriverSuffixes(rows.map(_.getLong(0)), rows.map(_.getUTF8String(1).clone()))
   }
 }

@@ -54,6 +54,9 @@ class FixpointSpec extends AnyFunSuite {
     val fills = Seq(fill("John Smith"), fill("John R. Smith")).toDS()
     val calls: Seq[(String, () => Any)] = Seq(
       "suffixRanks" -> (() => SuffixOps.suffixRanks(spark, docs).unpersist()),
+      "suffixRanks (rounds)" -> (() => DriverGate.closed(
+        SuffixOps.suffixRanks(spark, docs).unpersist())),
+      "longestRepeats" -> (() => SuffixOps.longestRepeats(spark, docs).collect()),
       "connectedComponentsStar" ->
         (() => GraphOps.connectedComponentsStar(spark, ccEdges).unpersist()),
       "connectedComponentsStar (rounds)" -> (() => DriverGate.closed(
@@ -93,12 +96,15 @@ class FixpointSpec extends AnyFunSuite {
   }
 
   test("suffixRanks and connectedComponentsStar keep only their result cached") {
-    assertOnlyResultCached("suffixRanks") {
-      val ranks = SuffixOps.suffixRanks(spark, docs)
-      assert(ranks.count() == docs.as[(Long, String)].collect()
-        .map(_._2.length.toLong).sum)
+    val positions = docs.as[(Long, String)].collect().map(_._2.length.toLong).sum
+    assertOnlyResultCached("suffixRanks (rounds)") {
+      val ranks = DriverGate.closed(SuffixOps.suffixRanks(spark, docs))
+      assert(ranks.count() == positions)
       Some(ranks)
     }
+    val before = persisted
+    assert(SuffixOps.suffixRanks(spark, docs).count() == positions)
+    assert(persisted == before, "suffixRanks' driver path cached something")
     assertOnlyResultCached("connectedComponentsStar") {
       val comps = GraphOps.connectedComponentsStar(spark, ccEdges)
       assert(comps.count() == 29L)
@@ -139,34 +145,49 @@ class FixpointSpec extends AnyFunSuite {
   }
 
   test("suffixRanks and connectedComponentsStar run one action per round") {
-    val suffixJobs = jobsOf(SuffixOps.suffixRanks(spark, docs).unpersist()).size
-    val long = jobsOf(SuffixOps.suffixRanks(spark, longDocs).unpersist())
-    val starJobs = DriverGate.closed(
-      jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())).size
+    val (suffixJobs, long, starJobs) = DriverGate.closed((
+      jobsOf(SuffixOps.suffixRanks(spark, docs).unpersist()).size,
+      jobsOf(SuffixOps.suffixRanks(spark, longDocs).unpersist()),
+      jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist()).size))
     val driverJobs = jobsOf(GraphOps.connectedComponentsStar(spark, ccEdges).unpersist())
+    val suffixDriver = jobsOf(SuffixOps.suffixRanks(spark, longDocs).collect())
+    val repeatsDriver = jobsOf(SuffixOps.longestRepeats(spark, longDocs).collect())
     info(s"suffixRanks: $suffixJobs jobs, on ~200-char docs ${long.size}, " +
       s"connectedComponentsStar: $starJobs jobs in rounds, " +
-      s"${driverJobs.size} on the driver path")
+      s"${driverJobs.size} on the driver path; on the driver path, " +
+      s"suffixRanks + collect: ${suffixDriver.size}, " +
+      s"longestRepeats + collect: ${repeatsDriver.size}")
     // measured with a count + a collect per doubling round and a
     // localCheckpoint'ed result: 52 jobs (5 rounds of 8). One action per
     // round, counted over the cached rows: 36. Seeded from 16-code-point
     // prefixes (one round on these <= 22-char docs), the partner rank
     // from a window and packed ranks: 9.
     assert(suffixJobs <= 9, s"suffixRanks ran $suffixJobs jobs")
+    // (unchanged by counting cached tables off their batches: the rounds
+    // read their caches through partCounts' collect, not Fixpoint.count)
     // ~200-char docs: 4 rounds of 3 jobs, plus 5 setup and 1 result.
     // With a 1-character seed (8 rounds), the partner from a join and
     // dense ranks from broadcast offsets: 51.
     assert(long.contains("suffixRanks: round 3"), s"rounds: ${long.distinct}")
     assert(long.size <= 18, s"suffixRanks ran ${long.size} jobs on ~200-char docs")
     // measured with Dataset.count() per round (an aggregate on top of
-    // the cache, one more job each): 91 (6 rounds). Now: 72 (the driver
-    // gate at 0 forces the rounds).
-    assert(starJobs <= 72, s"connectedComponentsStar ran $starJobs jobs")
+    // the cache, one more job each): 91 (6 rounds). Then 72 (the driver
+    // gate at 0 forces the rounds). Counting the setup's cached edges off
+    // the cache's batches, not as an adaptive stage of their own: 71.
+    assert(starJobs <= 71, s"connectedComponentsStar ran $starJobs jobs")
     // under the driver gate the same input runs no round: setup counts the
-    // distinct edges (3 jobs) and the result collects them (1). Before
-    // the gate the default call ran the rounds: 72 jobs.
+    // distinct edges (2 jobs; 3 when counted through the plan) and the
+    // result collects them (1). Before the gate the default call ran the
+    // rounds: 72 jobs.
     assert(!driverJobs.exists(_.contains("round")), s"jobs: ${driverJobs.distinct}")
-    assert(driverJobs.size <= 4, s"driver path ran ${driverJobs.size} jobs")
+    assert(driverJobs.size <= 3, s"driver path ran ${driverJobs.size} jobs")
+    // below the gate the suffix array is built on the driver: the length
+    // aggregate (2 jobs) and the collect of these local rows (none), then
+    // the caller's collect (1). The rounds ran 18 + 1 on these docs.
+    Seq(suffixDriver, repeatsDriver).foreach { jobs =>
+      assert(!jobs.exists(_.contains("round")), s"jobs: ${jobs.distinct}")
+      assert(jobs.size <= 3, s"driver path ran ${jobs.size} jobs: ${jobs.distinct}")
+    }
   }
 
   test("connectedComponentsStar's rounds stop in round 0 on a star forest") {

@@ -41,6 +41,11 @@ class StarComponentsSpec extends AnyFunSuite {
     val local = GraphOps.connectedComponentsStar(spark, edges)
     assert(local.storageLevel == StorageLevel.NONE, "driver-path labels are cached")
     assert(local.schema.map(_.dataType) == edges.schema.map(_.dataType))
+    // its row-count statistics let a small label set be broadcast into a
+    // join with a large table (planned only, never run)
+    val big = spark.range(0L, 1L << 40).select($"id".cast("string").as("v"))
+    assert(big.join(local, "v").queryExecution.executedPlan.toString
+      .contains("BroadcastHashJoin"), "driver-path labels are not broadcast")
     val got = rows(local)
     assert(got == rows(DriverGate.closed(GraphOps.connectedComponentsStar(spark, edges))))
     val labels = got.map(r => (r.getString(0), r.getString(1)))

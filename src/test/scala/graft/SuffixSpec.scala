@@ -1,31 +1,47 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.text.SuffixOps
 
+/** SuffixOps on both of its paths: below the driver gate (the default on
+ *  these fixtures) the suffix array is built in memory on the driver;
+ *  under [[DriverGate.closed]] the doubling rounds run as Spark jobs.
+ *  Every case checks that both paths return the same schema and rows. */
 class SuffixSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** The rows of `f` on the driver path and on the rounds, by path name,
+   *  after checking that both have the same schema. */
+  private def bothPaths(f: => DataFrame): Seq[(String, Array[Row])] = {
+    def rows(df: DataFrame) = try df.collect() finally df.unpersist()
+    val (driver, rounds) = (f, DriverGate.closed(f))
+    assert(driver.schema == rounds.schema)
+    Seq("driver" -> rows(driver), "rounds" -> rows(rounds))
+  }
+
   test("suffix ranks: the banana suffix array, dense and complete") {
     val d = Seq((0L, "banana")).toDF("doc_id", "text")
-    val raw = SuffixOps.suffixRanks(spark, d).collect()
-    info(raw.map(_.toString).mkString(" | "))
-    val got = raw.map(r => r.getLong(1) -> r.getLong(2)).toMap
-    // suffixes sorted: a(5) < ana(3) < anana(1) < banana(0) < na(4) < nana(2)
-    assert(got == Map(5L -> 1L, 3L -> 2L, 1L -> 3L, 0L -> 4L,
-      4L -> 5L, 2L -> 6L))
+    bothPaths(SuffixOps.suffixRanks(spark, d)).foreach { case (path, raw) =>
+      info(s"$path: " + raw.map(_.toString).mkString(" | "))
+      val got = raw.map(r => r.getLong(1) -> r.getLong(2)).toMap
+      // suffixes sorted: a(5) < ana(3) < anana(1) < banana(0) < na(4) < nana(2)
+      assert(got == Map(5L -> 1L, 3L -> 2L, 1L -> 3L, 0L -> 4L,
+        4L -> 5L, 2L -> 6L), path)
+    }
   }
 
   test("suffix ranks: equal suffixes across docs share a dense rank") {
     val d = Seq((0L, "ab"), (1L, "ab")).toDF("doc_id", "text")
-    val got = SuffixOps.suffixRanks(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    // "ab" (x2) < "b" (x2): dense ranks 1,1,2,2
-    assert(got == Map((0L, 0L) -> 1L, (1L, 0L) -> 1L,
-      (0L, 1L) -> 2L, (1L, 1L) -> 2L))
+    bothPaths(SuffixOps.suffixRanks(spark, d)).foreach { case (path, raw) =>
+      val got = raw.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      // "ab" (x2) < "b" (x2): dense ranks 1,1,2,2
+      assert(got == Map((0L, 0L) -> 1L, (1L, 0L) -> 1L,
+        (0L, 1L) -> 2L, (1L, 1L) -> 2L), path)
+    }
   }
 
   /** Brute-force suffix ranks: every code-point suffix of every doc,
@@ -43,23 +59,26 @@ class SuffixSpec extends AnyFunSuite {
     all.map { case (id, off, s) => (id, off) -> ranks(s) }.toMap
   }
 
-  /** suffixRanks equals `want`; a failure names a few wrong positions. */
+  /** suffixRanks equals `want` on both paths; a failure names the path
+   *  and a few wrong positions. */
   private def assertRanks(docs: Seq[(Long, String)],
-                          want: Map[(Long, Long), Long]): Unit = {
-    val got = SuffixOps.suffixRanks(spark, docs.toDF("doc_id", "text")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val bad = want.filter { case (pos, r) => !got.get(pos).contains(r) }
-    val same = got.size == want.size && bad.isEmpty // no macro dump of the maps
-    assert(same, s"${got.size} ranks for " +
-      s"${want.size} positions, ${bad.size} wrong, e.g. " +
-      bad.take(3).map { case (pos, r) => s"$pos: ${got.get(pos)} != $r" })
-  }
+                          want: Map[(Long, Long), Long]): Unit =
+    bothPaths(SuffixOps.suffixRanks(spark, docs.toDF("doc_id", "text")))
+      .foreach { case (path, rows) =>
+        val got = rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+        val bad = want.filter { case (pos, r) => !got.get(pos).contains(r) }
+        val same = got.size == want.size && bad.isEmpty // no macro dump of the maps
+        assert(same, s"$path: ${got.size} ranks for " +
+          s"${want.size} positions, ${bad.size} wrong, e.g. " +
+          bad.take(3).map { case (pos, r) => s"$pos: ${got.get(pos)} != $r" })
+      }
 
   test("suffix ranks == brute-force dense rank on a multi-doc fixture") {
     val docs = Seq((0L, "the cat sat on the mat"), (1L, "the cat ran"),
-      (2L, "a mat on the floor"), (3L, ""), (4L, "zz"))
-    // the empty doc has no positions, so its absence is part of the match
-    assertRanks(docs, bruteRanks(docs))
+      (2L, "a mat on the floor"), (3L, ""), (4L, "zz"), (5L, null))
+    // the empty and null docs have no positions, so their absence is
+    // part of the match
+    assertRanks(docs, bruteRanks(docs.filter(_._2 != null)))
   }
 
   test("suffix ranks == brute force across several range partitions") {
@@ -99,12 +118,36 @@ class SuffixSpec extends AnyFunSuite {
     assertRanks(docs, want)
   }
 
+  /** longestRepeats' (span, lcp, n_pairs) rows on both paths, in order. */
+  private def repeats(docs: DataFrame, k: Int, cap: Int = 200)
+      : Seq[(String, List[(String, Long, Long)])] =
+    bothPaths(SuffixOps.longestRepeats(spark, docs, k, cap)).map { case (path, rows) =>
+      path -> rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toList
+    }
+
   test("longest repeats: SA adjacency finds ana/na in banana") {
-    val d = Seq((0L, "banana")).toDF("doc_id", "text")
-    val got = SuffixOps.longestRepeats(spark, d, k = 10).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toList
-    // adjacent-pair LCPs: (a,ana)=1, (ana,anana)=3, (na,nana)=2
-    assert(got == List(("ana", 3L, 1L), ("na", 2L, 1L)))
+    // a nullable and a non-null text column
+    Seq(Seq((0L, "banana")).toDF("doc_id", "text"),
+      spark.range(1).select(col("id").as("doc_id"), lit("banana").as("text")))
+      .foreach { d =>
+        repeats(d, k = 10).foreach { case (path, got) =>
+          // adjacent-pair LCPs: (a,ana)=1, (ana,anana)=3, (na,nana)=2
+          assert(got == List(("ana", 3L, 1L), ("na", 2L, 1L)), path)
+        }
+      }
+  }
+
+  test("longest repeats: tied LCPs order spans by UTF-8 bytes; an LCP at the cap") {
+    // "ﬀﬀ" (U+FB00, 3 bytes) and "😀😀" (U+1F600, 4 bytes) both repeat,
+    // so their pairs tie at lcp 2 and k = 4 keeps only the first: ﬀ in
+    // Spark's byte order, 😀 in Java's UTF-16 order (surrogate 0xD83D).
+    // The 𝕏abc pair shares exactly cap = 4 code points.
+    val docs = Seq((0L, "ﬀﬀ1"), (1L, "ﬀﬀ2"), (2L, "😀😀1"), (3L, "😀😀2"),
+      (4L, "𝕏abc9"), (5L, "𝕏abc8")).toDF("doc_id", "text")
+    repeats(docs, k = 4, cap = 4).foreach { case (path, got) =>
+      assert(got == List(("𝕏abc", 4L, 1L), ("abc", 3L, 1L), ("bc", 2L, 1L),
+        ("ﬀﬀ", 2L, 1L)), path)
+    }
   }
 
   test("longest repeats: cross-document span, adjacency across partitions") {
@@ -117,14 +160,14 @@ class SuffixSpec extends AnyFunSuite {
       (2L, s"but $clause."),
       (3L, "something entirely different here")
     ).toDF("doc_id", "text").repartition(7)
-    val got = SuffixOps.longestRepeats(spark, docs, k = 5).collect()
-    assert(got.nonEmpty)
-    val top = got.head
+    val got = repeats(docs, k = 5)
+    assert(got(0)._2 == got(1)._2)
+    assert(got(0)._2.nonEmpty)
+    val top = got(0)._2.head
     // the top span carries the shared clause (suffixes starting at the
     // space BEFORE it legitimately share one char more)
-    assert(top.getString(0).contains(clause),
-      s"top span ${top.getString(0)} lacks the planted clause")
-    assert(top.getLong(1) >= clause.length)
+    assert(top._1.contains(clause), s"top span ${top._1} lacks the planted clause")
+    assert(top._2 >= clause.length)
   }
 
   test("repeatedSpans: fixed-length exact counts") {
@@ -166,11 +209,14 @@ class SuffixSpec extends AnyFunSuite {
   }
 
   test("suffixRanks: empty and all-empty-text inputs return empty") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(SuffixOps.suffixRanks(spark, empty).count() == 0L)
-    val blank = Seq((0L, ""), (1L, "")).toDF("doc_id", "text")
-    assert(SuffixOps.suffixRanks(spark, blank).count() == 0L)
+    // longestRepeats too, and an all-null-text input
+    Seq(Seq.empty[(Long, String)], Seq((0L, ""), (1L, "")), Seq((0L, null: String)))
+      .map(_.toDF("doc_id", "text")).foreach { d =>
+        bothPaths(SuffixOps.suffixRanks(spark, d)).foreach { case (path, rows) =>
+          assert(rows.isEmpty, path)
+        }
+        repeats(d, k = 5).foreach { case (path, rows) => assert(rows.isEmpty, path) }
+      }
   }
 
   // r6: the native suffix_lcp kernel (functions/LcpExpression.scala)
@@ -214,8 +260,9 @@ class SuffixSpec extends AnyFunSuite {
       (1L, s"$clause und mehr"),
       (2L, s"unrelated text"),
       (3L, s"x $clause")).toDF("doc_id", "text").repartition(5)
-    val got = SuffixOps.longestRepeats(spark, docs, k = 50)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
+    val paths = repeats(docs, k = 50)
+    assert(paths(0)._2 == paths(1)._2)
+    val got = paths(0)._2.sorted
     // the old HOF form over the same suffix ranks (capped at the same
     // 200 chars): prefix equality is monotone, so the count of
     // prefix-equal lengths IS the LCP
@@ -242,8 +289,7 @@ class SuffixSpec extends AnyFunSuite {
       .map { case (a, l) => (cpPrefix(a, l), l.toLong) }
       .groupBy(identity).map { case ((s, l), g) => (s, l, g.size.toLong) }
       .toSeq.sortBy(t => (-t._2, t._1)).take(50).sorted
-    assert(got.toSeq == want,
-      s"native ${got.toList} != HOF twin ${want.toList}")
+    assert(got == want.toList, s"native $got != HOF twin ${want.toList}")
     assert(got.exists(_._1.contains("世界")), "no unicode span surfaced")
   }
 }
