@@ -1,7 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+import org.apache.spark.storage.StorageLevel
+import graft.ops.{DriverText, Fixpoint}
 
 /**
  * Near-duplicate detection beyond SimHash: exact, word n-gram Jaccard and
@@ -94,11 +98,22 @@ object NearDup {
    *  ngramJaccard's exactly (spec-pinned); recall is the LSH band
    *  recall — a pair sharing no band is never scored. That is the
    *  standard 100-TB trade: exact verification over approximate keyed
-   *  candidate generation, nothing quadratic anywhere. */
+   *  candidate generation, nothing quadratic anywhere. Size-adaptive
+   *  under the same driver gate as [[dedupVerdicts]]: below it one job
+   *  collects (doc_id, text) and [[DriverNearDup]] computes the star
+   *  edges and the Jaccard values in memory, returned uncached through
+   *  `GraftSqlShim.driverFrame`; both paths return the same rows under
+   *  the same schema. */
   def ngramJaccardStar(spark: SparkSession, docs: DataFrame, n: Int = 3,
                        threshold: Double = 0.8): DataFrame =
-    jaccardForPairs(spark, docs, minhashStarEdges(spark, docs), n)
-      .filter(col("jaccard") >= threshold)
+    DriverText.gated(spark, docs, "text", "ngramJaccardStar",
+        DriverNearDup.input(docs)) { rows =>
+      GraftSqlShim.driverFrame(spark, DriverNearDup.jaccardSchema(docs),
+        new DriverNearDup(rows, DriverNearDup.idType(docs)).jaccard(n, threshold))
+    } { (_, _) =>
+      jaccardForPairs(spark, docs, minhashStarEdges(spark, docs), n)
+        .filter(col("jaccard") >= threshold)
+    }
 
   /** Duplicated-span statistics — the substring-level dedup signal of
    *  Lee et al. 2021 ("Deduplicating Training Data Makes Language Models
@@ -144,12 +159,13 @@ object NearDup {
       .withColumn("flagged", coalesce($"dup_fraction" >= flagAt, lit(false)))
   }
 
-  /** ARRAY<STRING> of word n-grams via SQL higher-order functions
-   *  (codegen-friendly, no UDF). */
-  def shingleCol(textCol: String, n: Int) =
-    expr(s"""transform(
-      sequence(0, greatest(size(split($textCol, ' ')) - $n, 0)),
-      i -> array_join(slice(split($textCol, ' '), i + 1, $n), ' '))""")
+  /** ARRAY<STRING> of word n-grams: for i in 0 .. max(words - n, 0) the
+   *  words i+1 .. i+n of `split(text, ' ')` joined by ' ', so a text
+   *  shorter than n words is one shingle. The split runs once per row and
+   *  the native kernel `shingles` (functions/TextExpressions) cuts the
+   *  n-grams, linear in the word count. */
+  def shingleCol(textCol: String, n: Int): Column =
+    graft.functions.text.shingles(split(expr(textCol), " "), n)
 
   /** MinHash+LSH near-dup candidate edges: 8 md5 minhashes → 2 bands →
    *  per-band STAR EDGES to each bucket's min-doc_id representative, NOT
@@ -200,31 +216,26 @@ object NearDup {
       .select($"doc_id",
         graft.functions.text.minhashHalves(array_distinct(unit)).as("_h"))
       .filter($"_h".isNotNull) // explode form: no words -> no signature row
-    // materialize the signature table once: it feeds both sides of the
-    // stacked band join (rep aggregate + probe), and without the
-    // checkpoint Spark recomputes the whole minhash subtree for
-    // each use (at scale you'd persist the signatures the same way)
     val b = m.select($"doc_id",
       md5(concat(element_at($"_h", 1), element_at($"_h", 2),
         element_at($"_h", 3), element_at($"_h", 4))).as("b1"),
       md5(concat(element_at($"_h", 5), element_at($"_h", 6),
         element_at($"_h", 7), element_at($"_h", 8))).as("b2"))
-      .localCheckpoint(true)
     // per band: bucket rep = min(doc_id); edge (rep, member) for every
-    // other member. r6 (guide §2.4): both bands share ONE agg + ONE join
-    // by stacking (band_no, band_val) rows — the former per-band
-    // agg/join pairs built two broadcast exchanges and twice the codegen
-    // for the identical shape; the stacked form computes the same edge
-    // set (per-(band_no, value) rep = min doc_id, edge per other member)
-    // with half the plan. Join input doubles to 2 rows/doc but carries
-    // only (band_no, value, doc_id) — same bytes as the two joins did.
+    // other member. Both bands are stacked as (band_no, band_val) rows
+    // and share ONE window min over the bucket: the signatures are read
+    // once, where an aggregate of the reps joined back to the members
+    // read them twice (and a pinned signature table is lost with its
+    // executor, with nothing to release it). The window buffers a bucket
+    // with spill, so a 46%-duplicate bucket stays linear.
     val stack = b.select($"doc_id", explode(array(
         struct(lit(1).as("bn"), $"b1".as("bv")),
         struct(lit(2).as("bn"), $"b2".as("bv")))).as("e"))
       .select($"doc_id", $"e.bn".as("bn"), $"e.bv".as("bv"))
-    val reps = stack.groupBy($"bn", $"bv").agg(min($"doc_id").as("d1"))
-    stack.join(reps, Seq("bn", "bv")).where($"doc_id" > $"d1")
-      .select($"d1", $"doc_id".as("d2")).distinct()
+    stack.select($"doc_id".as("d2"),
+        min($"doc_id").over(Window.partitionBy($"bn", $"bv")).as("d1"))
+      .where($"d2" > $"d1")
+      .select($"d1", $"d2").distinct()
   }
 
   /** End-to-end crawl dedup: MinHash star edges → connected components →
@@ -236,21 +247,43 @@ object NearDup {
    *
    *  Scale shape: edges are linear in corpus size (star edges, no
    *  all-pairs); components come from connectedComponentsStar — a driver
-   *  union-find while the distinct edges fit its gate (uncached labels,
-   *  no rounds), O(log n) large/small-star rounds above it — and the
-   *  election is ONE extra shuffle on the cluster key (struct-max
-   *  aggregate, map-side combinable) plus a broadcast-size join back —
-   *  nothing here is quadratic in a cluster's size, so a 10^8-doc
-   *  template cluster costs the same per-row work as a pair. Returns
+   *  union-find while the distinct edges fit its gate, O(log n)
+   *  large/small-star rounds above it — and the election is ONE extra
+   *  shuffle on the cluster key (struct-max aggregate, map-side
+   *  combinable) plus a broadcast-size join back — nothing here is
+   *  quadratic in a cluster's size, so a 10^8-doc template cluster costs
+   *  the same per-row work as a pair. Below the driver gate (see
+   *  [[dedupVerdicts]]) the whole pipeline runs in driver memory. Returns
    *  (doc_id, cluster, n_tokens, keep) ordered by doc_id. */
   def dedupClusters(spark: SparkSession, docs: DataFrame): DataFrame =
     dedupVerdicts(spark, docs).orderBy(col("doc_id"))
 
   /** dedupClusters without the presentation sort — the form pipelines
    *  compose (a global orderBy is pure cost when the consumer is a
-   *  semi-join on the keepers). */
+   *  semi-join on the keepers).
+   *
+   *  SIZE-ADAPTIVE, like connectedComponentsStar and SuffixOps: one
+   *  aggregate counts the code points of `text`, and at most
+   *  [[graft.link.Linker.MaxDriverAliasPairs]] of them (specs set it to 0
+   *  to force the Spark plan) are clustered on the driver. One job
+   *  collects (doc_id, text) and [[DriverNearDup]] computes signatures,
+   *  band buckets, star edges, components and the election in memory,
+   *  where the Spark plan spends some thirty jobs on a few hundred rows;
+   *  the verdicts come back through `GraftSqlShim.driverFrame`, an RDD
+   *  scan that is not cached. Both paths return the same rows under the
+   *  same schema; a document with null text gets no signature and stays
+   *  a singleton cluster. */
   def dedupVerdicts(spark: SparkSession, docs: DataFrame,
-                    shingle: Int = 1): DataFrame = {
+                    shingle: Int = 1): DataFrame =
+    DriverText.gated(spark, docs, "text", "dedupVerdicts",
+        DriverNearDup.input(docs)) { rows =>
+      GraftSqlShim.driverFrame(spark, DriverNearDup.verdictSchema(docs),
+        new DriverNearDup(rows, DriverNearDup.idType(docs)).verdicts(shingle))
+    } { (_, _) => verdictRounds(spark, docs, shingle) }
+
+  /** dedupVerdicts above the gate, as Spark jobs. */
+  private def verdictRounds(spark: SparkSession, docs: DataFrame,
+                            shingle: Int): DataFrame = {
     import spark.implicits._
     val edges = minhashStarEdges(spark, docs, shingle)
       .select($"d1".as("src"), $"d2".as("dst"))
@@ -259,8 +292,17 @@ object NearDup {
     // a pathological crawl; small edge sets finish on the driver, large
     // ones in O(log n) rounds — same (v, comp = min id) contract as
     // min-label propagation
-    val comps = graft.link.GraphOps.connectedComponentsStar(spark, edges)
-      .withColumnRenamed("v", "doc_id")
+    val labels = graft.link.GraphOps.connectedComponentsStar(spark, edges)
+    // the rounds return their labels cached, for the caller to release,
+    // and this plan reads them after it returns: move them into a shuffle
+    // instead (under AQE the barrier runs its map stage at once, and later
+    // reads fetch its output), so no cache outlives the call
+    val comps = (if (labels.storageLevel == StorageLevel.NONE) labels else {
+      val moved = Fixpoint.labeled(spark.sparkContext, "dedupVerdicts: result")(
+        GraftSqlShim.planBarrier(labels.repartition($"v")))
+      labels.unpersist()
+      moved
+    }).withColumnRenamed("v", "doc_id")
     val toks = docs.select($"doc_id",
       regexp_count($"text", lit("\\S+")).cast("int").as("n_tokens"))
     val labeled = toks.join(comps, Seq("doc_id"), "left")
@@ -443,7 +485,6 @@ object NearDup {
                       threshold: Double = 0.95, bits: Int = 12,
                       maxBucket: Int = 4096): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // one-pass native SRP bucket (was `bits` separate HOF folds, each
     // materializing a zipped intermediate array per row)
     val bucketBits = graft.functions.vec.srpBucket($"embedding", bits)

@@ -1,7 +1,7 @@
 package graft.text
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.LcpKernel
 import graft.link.Linker
-import graft.ops.{Fixpoint, Par}
+import graft.ops.{DriverText, Fixpoint, Par}
 
 /**
  * Distributed suffix-array construction by PREFIX DOUBLING (Manber &
@@ -57,7 +57,8 @@ import graft.ops.{Fixpoint, Par}
  *
  * SIZE-ADAPTIVE, like connectedComponentsStar: one aggregate counts the
  * code-point positions, and at most [[Linker.MaxDriverAliasPairs]] of
- * them (specs set it to 0 to force the rounds) are ranked on the driver.
+ * them (specs set it to 0 to force the rounds) are ranked on the driver
+ * (the gate NearDup's clustering shares, `graft.ops.DriverText`).
  * One job collects the (doc_id, text) rows and [[DriverSuffixes]] runs
  * the same prefix doubling in memory, each round two counting sorts, in
  * milliseconds where the rounds spend a few Spark jobs each; the result
@@ -77,13 +78,10 @@ object SuffixOps {
    *  suffix strings, ties shared by equal suffixes. */
   def suffixRanks(spark: SparkSession, docs: DataFrame,
                   textCol: String = "text"): DataFrame = {
-    val (maxLen, n) = lengths(spark, docs, textCol, "suffixRanks")
-    if (n <= Linker.MaxDriverAliasPairs)
-      Fixpoint.labeled(spark.sparkContext, "suffixRanks: result") {
-        val sa = DriverSuffixes.collect(docs, textCol)
-        GraftSqlShim.driverFrame(spark, RanksSchema, sa.rankRows)
-      }
-    else rankRounds(spark, docs, textCol, maxLen, n)
+    DriverText.gated(spark, docs, textCol, "suffixRanks",
+        DriverSuffixes.input(docs, textCol)) { rows =>
+      GraftSqlShim.driverFrame(spark, RanksSchema, DriverSuffixes(rows).rankRows)
+    } { (maxLen, n) => rankRounds(spark, docs, textCol, maxLen, n) }
   }
 
   /** suffixRanks' schema on both paths. */
@@ -91,18 +89,6 @@ object SuffixOps {
     StructField("doc_id", LongType, nullable = false),
     StructField("off", LongType, nullable = false),
     StructField("rank", LongType, nullable = false)))
-
-  /** (longest document, total positions) in code points, by one
-   *  aggregate labeled `name: setup`. Empty or all-null-text input
-   *  aggregates to NULLs, read as 0. */
-  private def lengths(spark: SparkSession, docs: DataFrame, textCol: String,
-                      name: String): (Int, Long) = {
-    val text = col(textCol)
-    val lens = Fixpoint.labeled(spark.sparkContext, s"$name: setup")(
-      docs.agg(max(length(text)), sum(length(text))).head())
-    (if (lens.isNullAt(0)) 0 else lens.getInt(0),
-      if (lens.isNullAt(1)) 0L else lens.getLong(1))
-  }
 
   /** suffixRanks above the gate: the doubling rounds, as Spark jobs, over
    *  `n` positions in documents of at most `maxLen` code points. */
@@ -260,15 +246,15 @@ object SuffixOps {
   def longestRepeats(spark: SparkSession, docs: DataFrame, k: Int = 20,
                      capChars: Int = 200,
                      textCol: String = "text"): DataFrame = {
-    val (maxLen, n) = lengths(spark, docs, textCol, "longestRepeats")
-    if (n <= Linker.MaxDriverAliasPairs)
-      Fixpoint.labeled(spark.sparkContext, "longestRepeats: result") {
-        GraftSqlShim.driverFrame(spark, RepeatsSchema,
-          DriverSuffixes.collect(docs, textCol).longestRepeats(k, capChars)
-            .iterator.map { case (span, lcp, pairs) => InternalRow(span, lcp, pairs) })
-      }
-    else repeatRounds(spark, docs, k, capChars, textCol,
-      rankRounds(spark, docs, textCol, maxLen, n))
+    DriverText.gated(spark, docs, textCol, "longestRepeats",
+        DriverSuffixes.input(docs, textCol)) { rows =>
+      GraftSqlShim.driverFrame(spark, RepeatsSchema,
+        DriverSuffixes(rows).longestRepeats(k, capChars)
+          .iterator.map { case (span, lcp, pairs) => InternalRow(span, lcp, pairs) })
+    } { (maxLen, n) =>
+      repeatRounds(spark, docs, k, capChars, textCol,
+        rankRounds(spark, docs, textCol, maxLen, n))
+    }
   }
 
   /** longestRepeats' schema on both paths (the rounds' boundary pairs
@@ -455,11 +441,11 @@ private[text] final class DriverSuffixes(ids: Array[Long], texts: Array[UTF8Stri
 }
 
 private[text] object DriverSuffixes {
-  /** One job collects the non-empty (doc_id, text) rows of `docs`. */
-  def collect(docs: DataFrame, textCol: String): DriverSuffixes = {
-    val rows = docs.select(col("doc_id").cast("long"), col(textCol))
+  /** The rows the driver path collects: non-empty (doc_id, text). */
+  def input(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(col("doc_id").cast("long"), col(textCol))
       .filter(length(col(textCol)) > 0)
-      .asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan.executeCollect()
+
+  def apply(rows: Array[InternalRow]): DriverSuffixes =
     new DriverSuffixes(rows.map(_.getLong(0)), rows.map(_.getUTF8String(1).clone()))
-  }
 }

@@ -61,20 +61,16 @@ object TextStats {
   /** TRUE rolling-hash fingerprint (q35): the minimum base-31 Rabin-Karp
    *  polynomial hash over all sliding character k-grams of the
    *  ascii-normalized text — the min-sampled member of the
-   *  winnowing/MOSS fingerprint family. Pure column expressions, exact
-   *  BIGINT math (k=8 chars at base 31 stays far below 2^63, so no
-   *  modulus and no FP), over lowercased [a-z0-9 ] only so the
-   *  char-code arithmetic is engine-independent; NULL for texts with
-   *  fewer than k normalized chars. Mirrored 1:1 by the q35 oracle. */
-  def rollingMin(text: Column, k: Int = 8): Column = {
-    val t = regexp_replace(lower(text), "[^a-z0-9 ]", "")
-    val windows = transform(sequence(lit(0), length(t) - k), j =>
-      (0 until k).map(i =>
-        ascii(t.substr(j + lit(i + 1), lit(1))) *
-          lit(BigInt(31).pow(k - 1 - i).toLong))
-        .reduce(_ + _))
-    when(length(t) >= k, array_min(windows)).otherwise(lit(null))
-  }
+   *  winnowing/MOSS fingerprint family. Exact BIGINT math (k=8 chars at
+   *  base 31 stays far below 2^63, so no modulus and no FP), over
+   *  lowercased [a-z0-9 ] only so the char-code arithmetic is
+   *  engine-independent; NULL for texts with fewer than k normalized
+   *  chars. The normalized text is computed once per row and the windows
+   *  by the native kernel `rolling_min_hash` (functions/TextExpressions),
+   *  linear in the text's length. Mirrored 1:1 by the q35 oracle. */
+  def rollingMin(text: Column, k: Int = 8): Column =
+    graft.functions.text.rollingMinHash(
+      regexp_replace(lower(text), "[^a-z0-9 ]", ""), k)
 
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1, public):
    *  per-doc fraction of tokens that are repeats, fraction taken by the

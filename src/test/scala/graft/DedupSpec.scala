@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.dedup.{NearDup, SimHash}
 import graft.extract.BagAgg
@@ -43,6 +44,17 @@ class DedupSpec extends AnyFunSuite {
     assert(!got.keySet.exists(p => p._1 == 13L || p._2 == 13L))
   }
 
+  /** `f`'s rows on the driver path (default gate) after asserting that
+   *  the Spark plan (gate closed) returns the same rows and schema. */
+  private def bothPaths(f: => DataFrame): Seq[Row] = {
+    val (onDriver, inSpark) = (f, DriverGate.closed(f))
+    assert(onDriver.schema == inSpark.schema)
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val got = rows(onDriver)
+    assert(got == rows(inSpark))
+    got
+  }
+
   test("clusterSizeHistogram: sizes roll up across exact-dup pairs and singletons") {
     val d = Seq(
       (1L, "first duplicated text body here"),
@@ -51,20 +63,19 @@ class DedupSpec extends AnyFunSuite {
       (4L, "second duplicated text body here"),
       (5L, "a completely unrelated singleton document")
     ).toDF("doc_id", "text")
-    val got = NearDup.clusterSizeHistogram(spark, d).collect()
+    val got = bothPaths(NearDup.clusterSizeHistogram(spark, d))
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 1L, 1L), (2L, 2L, 4L)))
   }
 
   test("dedupClusters and clusterSizeHistogram leave no cached labels behind") {
-    // the signature table's local checkpoint is the only block a call may
-    // leave (isCheckpointed); the connected-component labels must not stay
-    // persisted once the result is read
+    // on both paths: no signature checkpoint and no connected-component
+    // labels may stay persisted once the result is read
     val sc = spark.sparkContext
-    def persisted = sc.getPersistentRDDs.filterNot(_._2.isCheckpointed).keySet
+    def persisted = sc.getPersistentRDDs.keySet
     val before = persisted
-    assert(NearDup.dedupClusters(spark, docs).collect().length == 4)
-    assert(NearDup.clusterSizeHistogram(spark, docs).collect().nonEmpty)
+    assert(bothPaths(NearDup.dedupClusters(spark, docs)).length == 4)
+    assert(bothPaths(NearDup.clusterSizeHistogram(spark, docs)).nonEmpty)
     assert((persisted -- before).isEmpty,
       s"persisted RDDs left: ${(persisted -- before).map(sc.getPersistentRDDs)}")
   }
@@ -87,7 +98,7 @@ class DedupSpec extends AnyFunSuite {
       (4L, "the quick brown fox jumps over the lazy dog"),
       (5L, "the quick brown fox jumps over the lazy dog yes indeed")
     ).toDF("doc_id", "text")
-    val out = NearDup.dedupClusters(spark, five).collect()
+    val out = bothPaths(NearDup.dedupClusters(spark, five))
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("cluster"), r.getAs[Boolean]("keep")))).toMap
     assert(out.size == 5)
@@ -119,8 +130,8 @@ class DedupSpec extends AnyFunSuite {
         maxShingleDocFreq = Long.MaxValue).collect()
       .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2")) ->
         r.getAs[Double]("jaccard")).toMap
-    val star = NearDup.ngramJaccardStar(spark, docs, n = 3,
-        threshold = 0.0).collect()
+    val star = bothPaths(NearDup.ngramJaccardStar(spark, docs, n = 3,
+        threshold = 0.0))
       .map(r => (r.getAs[Long]("d1"), r.getAs[Long]("d2")) ->
         r.getAs[Double]("jaccard")).toMap
     star.foreach { case (p, j) =>
@@ -134,6 +145,36 @@ class DedupSpec extends AnyFunSuite {
     val forced = Seq((1L, 3L)).toDF("d1", "d2")
     val v = NearDup.jaccardForPairs(spark, docs, forced, n = 3).collect()
     assert(v.length == 1 && v.head.getAs[Double]("jaccard") == 0.0)
+  }
+
+  test("near-dup edge cases: both paths agree on every verdict and jaccard value") {
+    // null and empty text, docs under 3 words, repeated spaces (empty
+    // split tokens), a non-BMP word, and a three-way n_tokens tie: 20-22
+    // hold the same word multiset (one signature, one cluster) and four
+    // tokens each, so the smallest doc_id is elected. doc_id is nullable
+    // here, and a null doc_id gets no verdict on either path
+    val d = Seq[(java.lang.Long, String)]((null, "alpha beta gamma delta"),
+      (20L, "alpha beta gamma delta"), (21L, "delta gamma beta alpha"),
+      (22L, "alpha beta gamma delta"), (23L, null), (24L, ""),
+      (25L, "two words"), (26L, "two  words"), (27L, "two words"),
+      (28L, "𝕏 marks the spot 𝕏"), (29L, "𝕏 marks the spot"),
+      (30L, "one"), (31L, "one  "), (32L, "zeta eta theta iota kappa")
+    ).toDF("doc_id", "text")
+    val verdicts = bothPaths(NearDup.dedupVerdicts(spark, d))
+      .map(r => r.getLong(0) -> r).toMap
+    assert(verdicts.size == 13)
+    assert(verdicts(20L).getLong(1) == 20L && verdicts(20L).getBoolean(3))
+    assert(Seq(21L, 22L).forall(id => verdicts(id).getLong(1) == 20L &&
+      !verdicts(id).getBoolean(3)))
+    // null text: no signature, a singleton with no token count, kept
+    assert(verdicts(23L).getLong(1) == 23L && verdicts(23L).isNullAt(2) &&
+      verdicts(23L).getBoolean(3))
+    assert(verdicts(24L).getInt(2) == 0 && verdicts(26L).getInt(2) == 2)
+    // the 3-gram form dedupPages(near = true) runs
+    bothPaths(NearDup.dedupVerdicts(spark, d, shingle = 3))
+    val jac = bothPaths(NearDup.ngramJaccardStar(spark, d, n = 3, threshold = 0.0))
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(jac.get((20L, 22L)).contains(1.0) && jac.get((25L, 27L)).contains(1.0))
   }
 
   test("minhash_halves kernel == explode/groupBy-min SQL form, bit for bit") {
@@ -173,6 +214,30 @@ class DedupSpec extends AnyFunSuite {
       .select(graft.functions.text.minhashHalves($"ws").as("h"))
       .collect()
     assert(edge.forall(_.isNullAt(0)))
+  }
+
+  test("shingles and rolling_min_hash kernels == their higher-order-function forms") {
+    // the column forms the kernels replaced (they re-evaluate split / the
+    // normalized text inside their lambdas), interpreted over the local
+    // rows and code-generated after a shuffle
+    val d = Seq[(Long, String)]((1L, "a b c d e"), (2L, "two words"), (3L, "x"),
+      (4L, ""), (5L, null), (6L, "a  b   c "), (7L, "𝕏 y 𝕏 z w"),
+      (8L, "Rolling HASH, über ok!"), (9L, "short")).toDF("doc_id", "text")
+    def hof(n: Int) = expr(s"""transform(
+      sequence(0, greatest(size(split(text, ' ')) - $n, 0)),
+      i -> array_join(slice(split(text, ' '), i + 1, $n), ' '))""")
+    val k = 8
+    val t = regexp_replace(lower($"text"), "[^a-z0-9 ]", "")
+    val rollHof = when(length(t) >= k, array_min(transform(sequence(lit(0), length(t) - k),
+      j => (0 until k).map(i => ascii(t.substr(j + lit(i + 1), lit(1))) *
+        lit(BigInt(31).pow(k - 1 - i).toLong)).reduce(_ + _))))
+    val cols = Seq(1, 2, 3).flatMap(n => Seq(NearDup.shingleCol("text", n), hof(n))) ++
+      Seq(graft.text.TextStats.rollingMin($"text"), rollHof)
+    val rows = Seq(d, d.repartition(2)).flatMap(_.select($"doc_id" +: cols: _*).collect())
+    rows.foreach { r =>
+      (1 until r.length by 2).foreach(i => assert(r.get(i) == r.get(i + 1), s"row $r col $i"))
+    }
+    assert(rows.exists(r => !r.isNullAt(7)))
   }
 
   test("simhash near-dup pairs within small hamming distance") {

@@ -3,9 +3,10 @@ package graft
 import graft.link.Linker
 
 /** Runs a block with [[Linker.MaxDriverAliasPairs]] at 0, so the linker,
- *  GraphOps.connectedComponentsStar and SuffixOps.suffixRanks /
- *  longestRepeats take their distributed paths on small fixtures; the
- *  gate is restored afterwards. */
+ *  GraphOps.connectedComponentsStar, SuffixOps.suffixRanks /
+ *  longestRepeats and NearDup.dedupVerdicts / ngramJaccardStar take
+ *  their distributed paths on small fixtures; the gate is restored
+ *  afterwards. */
 object DriverGate {
   def closed[T](body: => T): T = {
     val saved = Linker.MaxDriverAliasPairs

@@ -4,6 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.link.{GraphOps, Linker}
+import graft.dedup.NearDup
 import graft.model.NER
 import graft.text.SuffixOps
 
@@ -187,6 +188,26 @@ class FixpointSpec extends AnyFunSuite {
     Seq(suffixDriver, repeatsDriver).foreach { jobs =>
       assert(!jobs.exists(_.contains("round")), s"jobs: ${jobs.distinct}")
       assert(jobs.size <= 3, s"driver path ran ${jobs.size} jobs: ${jobs.distinct}")
+    }
+  }
+
+  test("near-dup clustering and jaccard run no round below the gate") {
+    val before = persisted
+    val jobs = Seq(
+      "dedupClusters" -> jobsOf(NearDup.dedupClusters(spark, docs).collect()),
+      "clusterSizeHistogram" -> jobsOf(NearDup.clusterSizeHistogram(spark, docs).collect()),
+      "ngramJaccardStar" -> jobsOf(NearDup.ngramJaccardStar(spark, docs).collect()))
+    info(jobs.map { case (f, js) => s"$f + collect: ${js.size} jobs" }.mkString(", "))
+    assert(persisted == before, "the driver path cached something")
+    // the text-length aggregate (2 jobs) and the collect of these local
+    // rows (none), then the caller's: a collect (1), or a sort or
+    // aggregation and its collect. The Spark plans ran 14, 15 and 11 jobs
+    // per call in the traced benchmark.
+    val bound = Map("dedupClusters" -> 5, "clusterSizeHistogram" -> 5,
+      "ngramJaccardStar" -> 3)
+    jobs.foreach { case (f, js) =>
+      assert(!js.exists(_.contains("round")), s"$f jobs: ${js.distinct}")
+      assert(js.size <= bound(f), s"$f ran ${js.size} jobs: ${js.distinct}")
     }
   }
 

@@ -4,19 +4,24 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.dedup.NearDup
 import graft.link.GraphOps
 import graft.text.SuffixOps
 
 /** Measures the two paths on either side of the driver gate
  *  (Linker.MaxDriverAliasPairs) of connectedComponentsStar (the driver
  *  union-find and the large/small-star rounds, on generated dedup-shaped
- *  graphs of the given edge counts) and, with a leading `suffix`, of
+ *  graphs of the given edge counts), with a leading `suffix`, of
  *  SuffixOps (the driver-side suffix array and the doubling rounds, on
- *  generated documents of the given position counts).
+ *  generated documents of the given position counts) and, with a leading
+ *  `neardup`, of NearDup.dedupVerdicts / ngramJaccardStar (the in-memory
+ *  clustering and the Spark plans, on generated documents of the given
+ *  code-point counts).
  *
  *    sbt "Test/runMain graft.StarGateBench 100000 300000 1000000"
  *    SPARK_DRIVER_MEM=1g sbt "Test/runMain graft.StarGateBench driver 1000000"
  *    sbt "Test/runMain graft.StarGateBench suffix 100000 300000 1000000 2000000"
+ *    sbt "Test/runMain graft.StarGateBench neardup 100000 300000 1000000 2000000"
  *
  *  The graph has the shape of NearDup's MinHash star edges (d1 < d2, no
  *  self-loops): stars of 8 documents rooted at their minimum, and every
@@ -35,7 +40,10 @@ import graft.text.SuffixOps
  *  with " dup" appended. Per size and path the suffix mode prints the
  *  wall seconds of suffixRanks, of a q80-style consumer (orderBy + collect),
  *  of longestRepeats with its collect (q81), the Spark jobs of all three,
- *  and the heap in use after a GC while the ranks are held. */
+ *  and the heap in use after a GC while the ranks are held. The neardup
+ *  mode prints the wall seconds of dedupClusters with its collect (q38)
+ *  and of ngramJaccardStar with its collect (q78), the Spark jobs of
+ *  both, and the heap in use after a GC while the verdicts are held. */
 object StarGateBench {
 
   private val vocab = Array("a", "agg", "batch", "big", "column", "customer",
@@ -106,6 +114,18 @@ object StarGateBench {
       s"rows=$rows lcp=${top.headOption.fold(0L)(_.getLong(1))}")
   }
 
+  /** dedupClusters and ngramJaccardStar, each with its collect: the wall
+   *  seconds of both, the verdicts, and the kept and pair counts. */
+  private def neardupRun(spark: SparkSession, docs: DataFrame, driver: Boolean)
+      : (Seq[Double], DataFrame, String) = {
+    val t0 = System.nanoTime
+    val verdicts = gate(driver)(NearDup.dedupClusters(spark, docs))
+    val kept = verdicts.collect().count(_.getBoolean(3))
+    val t1 = System.nanoTime
+    val pairs = gate(driver)(NearDup.ngramJaccardStar(spark, docs)).collect().length
+    (Seq(secs(t0, t1), secs(t1, System.nanoTime)), verdicts, s"kept=$kept pairs=$pairs")
+  }
+
   def main(args: Array[String]): Unit = {
     val cores = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder().master(s"local[$cores]")
@@ -123,22 +143,28 @@ object StarGateBench {
       System.gc(); Thread.sleep(200); System.gc()
       rt.totalMemory - rt.freeMemory
     }
-    val suffix = args.headOption.contains("suffix")
-    val (paths, sizeArgs) = args.toSeq.drop(if (suffix) 1 else 0)
+    val mode = args.headOption.filter(Set("suffix", "neardup")).getOrElse("star")
+    val (paths, sizeArgs) = args.toSeq.drop(if (mode == "star") 0 else 1)
       .partition(a => a == "driver" || a == "rounds")
     val sizes = if (sizeArgs.isEmpty) Seq(100000L) else sizeArgs.map(_.toLong)
-    println(if (suffix) "positions path ranks_s consumer_s repeats_s jobs retained_mb"
-      else "edges path cc_s consumer_s jobs retained_mb")
+    println(mode match {
+      case "suffix" => "positions path ranks_s consumer_s repeats_s jobs retained_mb"
+      case "neardup" => "codepoints path clusters_s jaccard_s jobs retained_mb"
+      case _ => "edges path cc_s consumer_s jobs retained_mb"
+    })
     for (n <- sizes; rep <- 1 to 2; driver <- Seq(true, false)
          if paths.isEmpty || paths.contains(if (driver) "driver" else "rounds")) {
-      val input = (if (suffix) documents(spark, n).repartition(cores)
-        else graph(spark, n)).persist()
-      val m = if (suffix) input.agg(sum(length(col("text")))).head().getLong(0)
-        else input.count()
+      val input = (if (mode == "star") graph(spark, n)
+        else documents(spark, n).repartition(cores)).persist()
+      val m = if (mode == "star") input.count()
+        else input.agg(sum(length(col("text")))).head().getLong(0)
       val base = settled
       val j0 = jobs.get
-      val (secs, held, note) =
-        if (suffix) suffixRun(spark, input, driver) else starRun(spark, input, driver)
+      val (secs, held, note) = mode match {
+        case "suffix" => suffixRun(spark, input, driver)
+        case "neardup" => neardupRun(spark, input, driver)
+        case _ => starRun(spark, input, driver)
+      }
       val retained = settled - base
       println(s"$m ${if (driver) "driver" else "rounds"} " +
         secs.map(t => f"$t%.2f ").mkString + s"${jobs.get - j0} " +
